@@ -6,12 +6,13 @@ from __future__ import annotations
 
 from bench import HEADLINE
 
-WORKLOADS = ("raster_composite", "registry_queries", "snapshot_ingest")
+WORKLOADS = ("ingest_composite", "registry_queries")
 
-# (name, unit, better, bound): every workload reports every one
+# (name, unit, better, bound): every workload reports every one. wall_s is
+# printed but not declared: the host's speed swings it by a third over
+# minutes, more than any bound allows (see README.md)
 END_TO_END = [
     ("setup_s", "s", "lower", 0.25),
-    ("wall_s", "s", "lower", 0.25),
     ("busy_cpu_s", "s", "lower", 0.25),
     ("peak_rss_mb", "MB", "lower", 0.25),
 ]

@@ -12,7 +12,7 @@ import eventlog
 import host
 import tracing
 
-SETUPS = 3              # set-ups per run; setup_s is their median
+SETUPS = 3              # set-ups per run; setup_s is the median of all but the first
 HEAP = "2g"
 
 
@@ -86,8 +86,8 @@ class Context:
 def setup(ctx: Context, workload) -> tuple[list[float], list[float]]:
     """Start the session and warm it SETUPS times. Returns the set-up times
     (session start + warm-up) and the session-start times alone. The first
-    set-up also launches the JVM; the inputs it prepares (cached per seed)
-    are not counted."""
+    set-up also launches the JVM and runs everything cold, so it is set
+    apart from the others; the inputs it prepares are not counted."""
     setups, starts = [], []
     for k in range(SETUPS):
         if k:

@@ -14,12 +14,14 @@ def cores() -> int:
 
 def busy_cpu_s() -> float:
     """Whole-machine busy CPU-seconds from /proc/stat (user + nice + system
-    + irq + softirq + steal). Differences over an interval are robust to the
+    + irq + softirq). Steal, the time the hypervisor ran something else on
+    this machine's virtual CPUs, is left out: it measures the host's load,
+    not this machine's work. Differences over an interval are robust to the
     host's clock phases in a way wall time is not."""
     with open("/proc/stat") as f:
         parts = f.readline().split()
-    vals = [int(x) for x in parts[1:9]]
-    busy = vals[0] + vals[1] + vals[2] + vals[5] + vals[6] + vals[7]
+    vals = [int(x) for x in parts[1:8]]
+    busy = vals[0] + vals[1] + vals[2] + vals[5] + vals[6]
     return busy / os.sysconf("SC_CLK_TCK")
 
 

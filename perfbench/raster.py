@@ -1,166 +1,111 @@
-"""raster_composite: full passes over a seeded image table.
+"""The raster composite: the paper's raster-vector join over an image
+table, as the ingest_composite workload runs it over a snapshot's head.
 
-A pass is the paper's raster-vector join over an image table: scan ->
-rasterops.spatial_raster_features(BENCH_POLYS, res=9) (PIP join, geocell
-assignment, decode, QA mask, WOfS/NDVI features in one Arrow crossing) ->
-per-(poly, cell) composite aggregate -> noop sink.
+    scan -> rasterops.spatial_raster_features(BENCH_POLYS, res=9) (PIP join,
+    geocell assignment, decode, QA mask, WOfS/NDVI features in one Arrow
+    crossing) -> per-(poly, cell) composite aggregate -> collect
+
+Its output is checked against an independent count: the scalar PIP
+reference and cells.encode over the synthesizer's footprints.
 """
 
 from __future__ import annotations
 
-import os
 import time
 from collections import Counter
 
 import numpy as np
 
+import pool
 import stats
 from bench import BENCH_POLYS
-from harness import Context, Loop, modes
 
-N_IMAGES = 8000
-TILE_PX = 16
-PARTITIONS = 8
+TILE_PX = pool.TILE_PX
 RES = 9
-MIN_PASSES = 3
 
 
-def image_table(ctx: Context) -> str:
-    """Materialize the seeded image table once per seed (not timed)."""
-    from data_cube_utilities_spark import synth
+def scan(images):
+    from pyspark.sql import functions as F
 
-    path = os.path.join(ctx.cache, f"images-n{N_IMAGES}-px{TILE_PX}-seed{ctx.seed}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (synth.synthesize_images(ctx.spark, N_IMAGES, seed=ctx.seed,
-                                 tile_px=TILE_PX, partitions=PARTITIONS)
-         .write.mode("overwrite").parquet(path))
-    return path
+    return images.select("image_id", "bytes", "w", "h", "fmt",
+                         F.col("lon0").alias("x"), F.col("lat0").alias("y"))
 
 
-class Raster:
-    name = "raster_composite"
+def features(images):
+    from data_cube_utilities_spark.operators import rasterops
 
-    def __init__(self):
-        self.path = None
+    return rasterops.spatial_raster_features(scan(images), BENCH_POLYS, res=RES)
 
-    # -- stages -------------------------------------------------------------
-    def scan(self, spark):
-        from pyspark.sql import functions as F
 
-        return spark.read.parquet(self.path).select(
-            "image_id", "bytes", "w", "h", "fmt",
-            F.col("lon0").alias("x"), F.col("lat0").alias("y"))
+def composite(images):
+    from pyspark.sql import functions as F
 
-    def features(self, spark):
-        from data_cube_utilities_spark.operators import rasterops
+    return (features(images).groupBy("poly_id", "cell_id")
+            .agg(F.count("*").alias("n_tiles"),
+                 F.avg("clean_frac").alias("clean_frac"),
+                 F.avg("water_frac").alias("water_frac"),
+                 F.avg("mean_ndvi").alias("mean_ndvi"),
+                 F.avg("mean_nir").alias("mean_nir")))
 
-        return rasterops.spatial_raster_features(self.scan(spark), BENCH_POLYS,
-                                                 res=RES)
 
-    def composite(self, spark):
-        from pyspark.sql import functions as F
+def run(tracer, images) -> tuple[list, float]:
+    """The composite of `images`, collected, and the seconds spent on
+    stage actions only a traced run makes: it first runs the scan and
+    features stages as actions of their own, so the event log splits by
+    stage."""
+    t0 = time.perf_counter()
+    if tracer.enabled:
+        with tracer.span("rasterops.scan"):
+            _noop(scan(images))
+        with tracer.span("rasterops.features"):
+            _noop(features(images))
+    extra = time.perf_counter() - t0
+    with tracer.span("rasterops.composite"):
+        return composite(images).collect(), extra
 
-        return (self.features(spark).groupBy("poly_id", "cell_id")
-                .agg(F.count("*").alias("n_tiles"),
-                     F.avg("clean_frac").alias("clean_frac"),
-                     F.avg("water_frac").alias("water_frac"),
-                     F.avg("mean_ndvi").alias("mean_ndvi"),
-                     F.avg("mean_nir").alias("mean_nir")))
 
-    # -- protocol -----------------------------------------------------------
-    def prepare(self, ctx: Context) -> None:
-        self.path = image_table(ctx)
+def reference_counts(ids) -> dict:
+    """Tiles per (poly, cell) of the pool images `ids`: scalar PIP and
+    cells.encode over their footprints, independent of the Spark path."""
+    from data_cube_utilities_spark import cells, synth
+    from data_cube_utilities_spark.operators import spatial
 
-    def warm(self, ctx: Context) -> None:
-        _noop(self.scan(ctx.spark))
+    lat, lon = synth.footprints(np.asarray(ids), pool.POOL_SEED)
+    cell = cells.encode(lat, lon, RES)
+    want = Counter()
+    for pid, ring in BENCH_POLYS.items():
+        for i in range(len(lat)):
+            if spatial.pip_scalar_reference(lon[i], lat[i], ring):
+                want[(pid, int(cell[i]))] += 1
+    return dict(want)
 
-    def warm_traced(self, ctx: Context) -> None:
-        _noop(self.composite(ctx.spark))
 
-    def check(self, ctx: Context, lp: Loop) -> None:
-        """Per-(poly, cell) tile counts must equal an independent scalar PIP
-        + cell encoding over the synthesizer's footprints. This first full
-        pass also starts the Python workers before the loop."""
-        from data_cube_utilities_spark import cells, synth
-        from data_cube_utilities_spark.operators import spatial
+def check(rows, want: dict) -> str | None:
+    """None when the composite rows hold the reference counts."""
+    got = {(r["poly_id"], r["cell_id"]): r["n_tiles"] for r in rows}
+    if got == want:
+        return None
+    bad = sorted(set(got.items()) ^ set(want.items()))[:3]
+    return f"raster counts differ from the reference: {bad}"
 
-        got = {(r.poly_id, r.cell_id): r.n_tiles
-               for r in self.composite(ctx.spark)
-               .select("poly_id", "cell_id", "n_tiles").collect()}
-        lat, lon = synth.footprints(np.arange(N_IMAGES), ctx.seed)
-        cell = cells.encode(lat, lon, RES)
-        want = Counter()
-        for pid, ring in BENCH_POLYS.items():
-            for i in range(N_IMAGES):
-                if spatial.pip_scalar_reference(lon[i], lat[i], ring):
-                    want[(pid, int(cell[i]))] += 1
-        if got == dict(want):
-            lp.ok()
-        else:
-            bad = sorted(set(got.items()) ^ set(want.items()))[:3]
-            lp.fail(f"raster counts differ from the reference: {bad}")
 
-    def _pass(self, ctx: Context) -> float:
-        """One pass; returns the wall of the full-pipeline action (the
-        traced run also runs the scan and features stages as actions of
-        their own before it)."""
-        spark, tr = ctx.spark, ctx.tracer
-        if tr.enabled:
-            # each stage as its own action, so the event log splits by stage
-            with tr.span("rasterops.scan"):
-                _noop(self.scan(spark))
-            with tr.span("rasterops.features"):
-                _noop(self.features(spark))
-        t0 = time.perf_counter()
-        with tr.span("rasterops.composite"):
-            _noop(self.composite(spark))
-        return time.perf_counter() - t0
-
-    def loop(self, ctx: Context, lp: Loop, seconds: float) -> dict:
-        s = {"walls": [], "cpus": [], "walls_traced": [], "cpus_traced": []}
-        deadline = time.perf_counter() + seconds
-        k = 0
-        while k < MIN_PASSES or time.perf_counter() < deadline:
-            for on in modes(ctx, lp, k):
-                ctx.tracer.op = k
-                r = lp.run(self._pass, ctx)
-                if r is not None:
-                    sfx = "_traced" if on else ""
-                    s["walls" + sfx].append(r[0])
-                    s["cpus" + sfx].append(r[2])
-            k += 1
-        return s
-
-    def e2e(self, s: dict, traced: bool = False) -> dict:
-        sfx = "_traced" if traced else ""
-        return {"wall_s": stats.median(s["walls" + sfx]),
-                "busy_cpu_s": stats.median(s["cpus" + sfx])}
-
-    def report(self, s: dict) -> list[str]:
-        return [stats.fmt_summary("pass_wall_s", "s", s["walls"]),
-                stats.fmt_summary("pass_busy_cpu_s", "s", s["cpus"]),
-                f"raster_images_per_s: {N_IMAGES / stats.median(s['walls']):.6g} 1/s"
-                f" (images={N_IMAGES}, tile_px={TILE_PX},"
-                f" partitions={PARTITIONS})"]
-
-    def layer_metrics(self, samples: dict, spans, totals) -> dict:
-        by = {}
-        for s in spans:
-            by.setdefault(s["name"], []).append(s)
-        out = {}
-        for stage in ("scan", "features", "composite"):
-            ss = by.get(f"rasterops.{stage}", [])
-            out[f"rasterops.{stage}_s"] = stats.median(
-                [s["end"] - s["start"] for s in ss]) if ss else 0.0
-        comp = [totals[s["id"]] for s in by.get("rasterops.composite", [])]
-        for key, field in (("python_worker_s", "python_worker_s"),
-                           ("python_bytes_sent", "python_bytes_sent"),
-                           ("python_bytes_returned", "python_bytes_returned"),
-                           ("tasks", "tasks"),
-                           ("shuffle_write_bytes", "shuffle_write_bytes")):
-            out[f"rasterops.{key}"] = (stats.median([t[field] for t in comp])
-                                       if comp else 0)
-        return out
+def layer_metrics(spans, totals) -> dict:
+    """rasterops.* over the traced runs: stage walls and the composite's
+    event-log totals, medians over composites."""
+    by = {}
+    for s in spans:
+        by.setdefault(s["name"], []).append(s)
+    out = {}
+    for stage in ("scan", "features", "composite"):
+        ss = by.get(f"rasterops.{stage}", [])
+        out[f"rasterops.{stage}_s"] = stats.median(
+            [s["end"] - s["start"] for s in ss]) if ss else 0.0
+    comp = [totals[s["id"]] for s in by.get("rasterops.composite", [])]
+    for field in ("python_worker_s", "python_bytes_sent",
+                  "python_bytes_returned", "tasks", "shuffle_write_bytes"):
+        out[f"rasterops.{field}"] = (stats.median([t[field] for t in comp])
+                                     if comp else 0)
+    return out
 
 
 def micro_timings(seed: int) -> dict:

@@ -1,7 +1,7 @@
 """The geocube benchmark: one workload, one seed, one Spark session.
 
-    python3 perfbench/run.py --workload raster_composite --seed 1 \\
-        --seconds 10 --trace 0
+    python3 perfbench/run.py --workload ingest_composite --seed 1 \\
+        --seconds 3 --trace 0
 
 Run from the repository root. The command builds its inputs from the seed
 (cached under perfbench/.work), sets up the session several times, checks
@@ -49,12 +49,12 @@ def main(argv=None) -> int:
     import harness
     import host
     import stats
-    from raster import Raster, micro_timings
+    from ingest import IngestComposite
+    from raster import micro_timings
     from registry import Registry
-    from snapshot import Snapshot
 
-    wl = {"raster_composite": Raster, "registry_queries": Registry,
-          "snapshot_ingest": Snapshot}[args.workload]()
+    wl = {"ingest_composite": IngestComposite,
+          "registry_queries": Registry}[args.workload]()
     ctx = harness.Context(ROOT, args.workload, args.seed, bool(args.trace))
     lp = harness.Loop()
     lines = [f"workload={args.workload} seed={args.seed} cores={ctx.cores}"
@@ -69,16 +69,20 @@ def main(argv=None) -> int:
         if not args.trace:
             samples = wl.loop(ctx, lp, args.seconds)
             rss = host.tree_peak_rss_mb()
-            values = dict(wl.e2e(samples), setup_s=stats.median(setups),
+            values = dict(wl.e2e(samples), setup_s=stats.median(setups[1:]),
                           peak_rss_mb=rss)
             metrics = {name: (values[name], unit)
                        for name, unit, _, _ in catalog.END_TO_END}
             lines += wl.report(samples)
-            lines.append(stats.fmt_summary("setup_s", "s", setups))
+            lines.append(f"wall_s: {values['wall_s']:.6g} s (not in the JSON:"
+                         " host phases swing it, see README.md)")
+            lines.append(stats.fmt_summary("setup_s", "s", setups[1:])
+                         + f" (restarts; first set-up, with the JVM launch:"
+                         f" {setups[0]:.3f} s)")
         else:
             layer, overhead = harness.traced_phase(ctx, wl, lp, args.seconds)
             layer.update(micro_timings(args.seed))
-            layer["session.start_s"] = stats.median(starts)
+            layer["session.start_s"] = stats.median(starts[1:])
             layer["trace.overhead_frac"] = overhead
             lines.append(f"tracing overhead: {overhead:.3%} of wall_s"
                          " (traced vs untraced runs, A/B in one session)")
