@@ -19,40 +19,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "pricing_summary", "median_mosaic", "max_by_selector", "wofs_classify",
-    "band_indices", "cell_assignment", "first_last_valid", "window_baseline",
-    "asof_join", "find_gaps", "pip_relational", "zonal_stats", "knn",
-    "anti_join_quality_gate", "minhash_lsh", "embedding_near_dup",
-    "cosine_topk", "lsh_ann_batch", "pack_chunks", "mann_kendall",
-    "flow_accum",
-]
-
-
-def _host_calibration(seconds: float = 2.0) -> int:
-    """Single-thread spin count per `seconds` (bench.py's anchor): the
-    host clock oscillates ~1.6x between phases and throttles under load,
-    so walls/cpu-s are only comparable between runs whose spins agree.
-    r1-r4 fast band: ~14-22M per 2s."""
-    t0 = time.time()
-    n = 0
-    while time.time() - t0 < seconds:
-        n += 1
-    return n
-
-
-def _busy_cpu_s() -> float:
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    vals = [int(x) for x in parts[1:9]]
-    busy = vals[0] + vals[1] + vals[2] + vals[5] + vals[6] + vals[7]
-    return busy / os.sysconf("SC_CLK_TCK")
+from bench import HEADLINE, SF_DIR, _busy_cpu_s, _host_calibration  # noqa: E402
 
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR",
-                                                   "/root/testdata/sf1.0"))
+    ap.add_argument("--sf", default=SF_DIR)
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--plans", default=None,
                     help="dir to write <name>_<suffix>.txt explain output")

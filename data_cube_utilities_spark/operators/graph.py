@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .fixpoint import iterate, materialized
+
 PR_SCALE = 2 ** 30
 
 
@@ -50,7 +52,7 @@ def pagerank_fixed(edges: DataFrame, iters: int = 5,
     to the node set (nodes with no in-links get bare base).  The rank
     table is one row per node — at web scale partition both sides by
     node id and the join co-locates; `iters` is small and fixed (the
-    classic 5-20), so total cost is iters * one-shuffle."""
+    classic 5-20, no early stop), so total cost is iters * one-shuffle."""
     e = edges.select(F.col(src_col).cast("long").alias("src"),
                      F.col(dst_col).cast("long").alias("dst"))
     nodes = (e.select(F.col("src").alias("node"))
@@ -64,35 +66,31 @@ def pagerank_fixed(edges: DataFrame, iters: int = 5,
     base = ((damp_den - damp_num) * PR_SCALE // damp_den) // n_nodes
     init = PR_SCALE // n_nodes
 
-    pr = nodes.withColumn("pr", F.lit(init).cast("long")).persist()
-    pr.count()
-    deg = out_deg.persist()
-    for _ in range(iters):
-        contrib = (e.join(pr, e.src == pr.node)
-                    .join(deg, pr.node == deg.node)
-                    .select(F.col("dst").alias("node"),
-                            F.expr("pr DIV out_deg").alias("share")))
-        summed = contrib.groupBy("node").agg(
-            F.sum("share").cast("long").alias("s"))
-        new = (nodes.join(summed, ["node"], "left")
-                    .select("node",
-                            (F.lit(base)
-                             + F.expr(f"({damp_num} * coalesce(s, 0)) "
-                                      f"DIV {damp_den}"))
-                            .cast("long").alias("pr"))
-                    .persist())
-        new.count()
-        pr.unpersist()
-        pr = new
-    out = (pr.join(out_deg, ["node"], "left")
-             .join(in_deg, ["node"], "left")
-             .select("node", "pr",
-                     F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-                     F.coalesce("in_deg", F.lit(0)).alias("in_deg")))
-    out = out.localCheckpoint(eager=True)
-    pr.unpersist()
-    deg.unpersist()
-    return out
+    with materialized(out_deg) as deg:
+        def step(pr: DataFrame) -> DataFrame:
+            contrib = (e.join(pr, e.src == pr.node)
+                        .join(deg, pr.node == deg.node)
+                        .select(F.col("dst").alias("node"),
+                                F.expr("pr DIV out_deg").alias("share")))
+            summed = contrib.groupBy("node").agg(
+                F.sum("share").cast("long").alias("s"))
+            return (nodes.join(summed, ["node"], "left")
+                         .select("node",
+                                 (F.lit(base)
+                                  + F.expr(f"({damp_num} * coalesce(s, 0)) "
+                                           f"DIV {damp_den}"))
+                                 .cast("long").alias("pr")))
+
+        pr, _ = iterate(nodes.withColumn("pr", F.lit(init).cast("long")),
+                        step, [F.sum("pr").alias("rank_mass")], iters,
+                        until=lambda prev, cur: False, name="pagerank_fixed")
+        with materialized(pr):
+            return (pr.join(out_deg, ["node"], "left")
+                      .join(in_deg, ["node"], "left")
+                      .select("node", "pr",
+                              F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
+                              F.coalesce("in_deg", F.lit(0)).alias("in_deg"))
+                      .localCheckpoint(eager=True))
 
 
 def triangle_count(edges: DataFrame, src_col: str = "src",
@@ -172,9 +170,9 @@ def kcore(edges: DataFrame, k: int = 3, src_col: str = "src",
     any unroll depth >= the true peel depth hash-matches.
 
     Shape at scale: per round one degree aggregate + two semi-joins,
-    all keyed on node ids; localCheckpoint flattens the iterated plan
-    and the convergence probe is one count on the (shrinking) edge
-    set.  Returns (node, core_degree) for the members of the k-core —
+    all keyed on node ids; edges only leave, so the edge count
+    observed on each round's checkpoint job is the fixpoint test.
+    Returns (node, core_degree) for the members of the k-core —
     core_degree >= k by construction; empty when the graph has no
     k-core."""
     alive = (edges.select(F.col(src_col).cast("long").alias("a"),
@@ -182,32 +180,25 @@ def kcore(edges: DataFrame, k: int = 3, src_col: str = "src",
                   .filter(F.col("a") != F.col("b"))
                   .select(F.least("a", "b").alias("u"),
                           F.greatest("a", "b").alias("v"))
-                  .distinct()
-                  .localCheckpoint(eager=True))
-    n_edges = alive.count()
-    for _ in range(max_rounds):
-        if n_edges == 0:
-            break
-        deg = (alive.select(F.col("u").alias("node"))
-                    .unionAll(alive.select(F.col("v").alias("node")))
-                    .groupBy("node")
-                    .agg(F.count("*").cast("long").alias("deg")))
-        keep = deg.filter(F.col("deg") >= k).select("node")
-        nxt = (alive.join(keep.withColumnRenamed("node", "u"), "u",
-                          "left_semi")
-                    .join(keep.withColumnRenamed("node", "v"), "v",
-                          "left_semi")
-                    .select("u", "v")
-                    .localCheckpoint(eager=True))
-        n_nxt = nxt.count()
-        alive = nxt
-        if n_nxt == n_edges:      # nothing peeled: fixpoint
-            break
-        n_edges = n_nxt
-    return (alive.select(F.col("u").alias("node"))
-                 .unionAll(alive.select(F.col("v").alias("node")))
-                 .groupBy("node")
-                 .agg(F.count("*").cast("long").alias("core_degree")))
+                  .distinct())
+
+    def degree(alive: DataFrame) -> DataFrame:
+        return (alive.select(F.col("u").alias("node"))
+                     .unionAll(alive.select(F.col("v").alias("node")))
+                     .groupBy("node")
+                     .agg(F.count("*").cast("long").alias("deg")))
+
+    def peel(alive: DataFrame) -> DataFrame:
+        keep = degree(alive).filter(F.col("deg") >= k).select("node")
+        return (alive.join(keep.withColumnRenamed("node", "u"), "u",
+                           "left_semi")
+                     .join(keep.withColumnRenamed("node", "v"), "v",
+                           "left_semi")
+                     .select("u", "v"))
+
+    alive, _ = iterate(alive, peel, [F.count("*").alias("edges")],
+                       max_rounds, name="kcore")
+    return degree(alive).withColumnRenamed("deg", "core_degree")
 
 
 def label_propagation(edges: DataFrame, rounds: int = 4,
@@ -229,33 +220,34 @@ def label_propagation(edges: DataFrame, rounds: int = 4,
 
     Shape at scale: per sweep one equi-join (labels onto the
     symmetrized edge list) + one (node, label) count + one max_by
-    argmax — all shuffles keyed on node ids; localCheckpoint flattens
-    the iterated plan.  Returns (node, community) where community is
-    the surviving label (a node id)."""
+    argmax — all shuffles keyed on node ids; fixpoint.iterate
+    checkpoints every sweep.  Returns (node, community) where
+    community is the surviving label (a node id)."""
     e = (edges.select(F.col(src_col).cast("long").alias("a"),
                       F.col(dst_col).cast("long").alias("b"))
               .filter(F.col("a") != F.col("b"))
               .select(F.least("a", "b").alias("u"),
                       F.greatest("a", "b").alias("v"))
               .distinct())
-    sym = (e.unionAll(e.select(F.col("v").alias("u"),
-                               F.col("u").alias("v")))
-            .localCheckpoint(eager=True))
-    lab = (sym.select("u").distinct()
-              .select("u", F.col("u").alias("lab"))
-              .localCheckpoint(eager=True))
-    for _ in range(rounds):
-        nbr = (sym.join(lab.select(F.col("u").alias("v"),
-                                   F.col("lab").alias("vlab")), "v")
-                  .groupBy("u", "vlab")
-                  .agg(F.count("*").cast("long").alias("c")))
-        # most frequent neighbor label, ties to the smallest label:
-        # min over (-count, label) is exactly that argmax
-        lab = (nbr.groupBy("u")
-                  .agg(F.min(F.struct((-F.col("c")).alias("nc"),
-                                      F.col("vlab").alias("lab"))).alias("b"))
-                  .select("u", F.col("b.lab").alias("lab"))
-                  .localCheckpoint(eager=True))
+    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    with materialized(sym) as sym:
+        def sweep(lab: DataFrame) -> DataFrame:
+            nbr = (sym.join(lab.select(F.col("u").alias("v"),
+                                       F.col("lab").alias("vlab")), "v")
+                      .groupBy("u", "vlab")
+                      .agg(F.count("*").cast("long").alias("c")))
+            # most frequent neighbor label, ties to the smallest label:
+            # min over (-count, label) is exactly that argmax
+            return (nbr.groupBy("u")
+                       .agg(F.min(F.struct((-F.col("c")).alias("nc"),
+                                           F.col("vlab").alias("lab")))
+                             .alias("b"))
+                       .select("u", F.col("b.lab").alias("lab")))
+
+        lab, _ = iterate(sym.select("u", F.col("u").alias("lab")).distinct(),
+                         sweep, [F.count("*").alias("nodes")], rounds,
+                         until=lambda prev, cur: False,
+                         name="label_propagation")
     return lab.select(F.col("u").alias("node"),
                       F.col("lab").alias("community"))
 
@@ -349,11 +341,9 @@ def sssp(edges: DataFrame, source_pred, max_rounds: int = 32,
     chains); fixpoint is detected with the cheap (count, sum) pair:
     per-node distances only ever DECREASE and nodes are only ADDED, so
     an unchanged (row count, total distance) pair implies no per-node
-    change.  Each round is localCheckpoint-ed — the lineage MUST be
-    truncated per round (an iterative plan that re-analyzes the whole
-    history deepens Catalyst's tree past the JVM stack by round ~15);
-    on a real cluster swap in reliable `checkpoint()` so a lost
-    executor replays one round, not the whole chain.  The oracle
+    change.  fixpoint.iterate checkpoints every round (cutting the
+    lineage) and observes that pair on the same job, so detection
+    costs no extra job.  The oracle
     unrolls the same rounds as a CTE chain (rounds past the fixpoint
     are no-ops — the kcore/rdp contract).
 
@@ -364,33 +354,23 @@ def sssp(edges: DataFrame, source_pred, max_rounds: int = 32,
     e = (edges.select(F.col(src_col).cast("long").alias("src"),
                       F.col(dst_col).cast("long").alias("dst"),
                       w.alias("w"))
-              .filter(F.col("src") != F.col("dst"))
-              .persist())  # scanned once per round — cache, release at end
-    nodes = (e.select(F.col("src").alias("node"))
-              .unionByName(e.select(F.col("dst").alias("node")))
-              .distinct())
-    dist = (nodes.filter(source_pred(F.col("node")))
-                 .select("node", F.lit(0).cast("long").alias("dist"))
-                 .localCheckpoint(eager=True))
-    n_prev, s_prev = _count_sum(dist)
-    for _ in range(max_rounds):
-        relaxed = (dist.join(e, dist.node == e.src)
-                       .select(F.col("dst").alias("node"),
-                               (F.col("dist") + F.col("w")).alias("dist")))
-        nxt = (dist.unionByName(relaxed)
-                   .groupBy("node")
-                   .agg(F.min("dist").alias("dist"))
-                   .localCheckpoint(eager=True))
-        n_cur, s_cur = _count_sum(nxt)
-        dist = nxt
-        if (n_cur, s_cur) == (n_prev, s_prev):
-            break
-        n_prev, s_prev = n_cur, s_cur
-    e.unpersist()
-    return dist
+              .filter(F.col("src") != F.col("dst")))
+    with materialized(e) as e:   # scanned once per round
+        nodes = (e.select(F.col("src").alias("node"))
+                  .unionByName(e.select(F.col("dst").alias("node")))
+                  .distinct())
 
+        def relax(dist: DataFrame) -> DataFrame:
+            relaxed = (dist.join(e, dist.node == e.src)
+                           .select(F.col("dst").alias("node"),
+                                   (F.col("dist") + F.col("w"))
+                                   .alias("dist")))
+            return (dist.unionByName(relaxed)
+                        .groupBy("node")
+                        .agg(F.min("dist").alias("dist")))
 
-def _count_sum(dist: DataFrame) -> tuple:
-    row = dist.agg(F.count("*").alias("n"),
-                   F.coalesce(F.sum("dist"), F.lit(0)).alias("s")).first()
-    return int(row["n"]), int(row["s"])
+        return iterate(
+            nodes.filter(source_pred(F.col("node")))
+                 .select("node", F.lit(0).cast("long").alias("dist")),
+            relax, [F.count("*").alias("n"), F.sum("dist").alias("s")],
+            max_rounds, name="sssp")[0]

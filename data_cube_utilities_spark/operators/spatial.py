@@ -33,6 +33,7 @@ expansion (SURVEY.md section 2.3).
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Sequence
 
 import numpy as np
@@ -41,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import cells
+from .fixpoint import connected_components, iterate, materialized
 
 # ---------------------------------------------------------------------------
 # numpy kernel (shared by both UDF strategies) + scalar reference
@@ -664,30 +666,25 @@ def _d8_pair_closure(flow: DataFrame, max_iters: int = 48) -> DataFrame:
     """Strict-ancestor pair closure (sx,sy) -> (tx,ty) of the D8 graph
     by path-DOUBLING self-joins: after k rounds every path of length
     <= 2^k is present — O(log max_path_length) shuffles on the
-    functional acyclic drain graph.  Each round persists, counts (the
-    fixpoint test) and localCheckpoints to truncate lineage.  Shared by
-    flow_accumulation_grid and stream_order_shreve_grid."""
+    functional acyclic drain graph.  Pairs are only added, so the pair
+    count observed on each round's checkpoint is the fixpoint test.
+    Shared by flow_accumulation_grid and stream_order_shreve_grid."""
     edges = (flow.filter(F.col("flow_dir") > 0)
                  .select(F.col("ix").alias("sx"), F.col("iy").alias("sy"),
                          F.col("to_ix").alias("tx"),
                          F.col("to_iy").alias("ty")))
-    pairs = edges.persist()
-    n = pairs.count()
-    for _ in range(max_iters):
+
+    def double(pairs: DataFrame) -> DataFrame:
         hop = pairs.select(F.col("sx").alias("hx"), F.col("sy").alias("hy"),
                            F.col("tx").alias("htx"), F.col("ty").alias("hty"))
         ext = (pairs.join(hop, (F.col("tx") == F.col("hx"))
                           & (F.col("ty") == F.col("hy")))
                     .select("sx", "sy", F.col("htx").alias("tx"),
                             F.col("hty").alias("ty")))
-        merged = pairs.unionByName(ext).distinct().localCheckpoint()
-        m = merged.count()
-        pairs.unpersist()
-        pairs = merged
-        if m == n:
-            break
-        n = m
-    return pairs
+        return pairs.unionByName(ext).distinct()
+
+    return iterate(edges, double, [F.count("*").alias("pairs")],
+                   max_iters, name="d8_pair_closure")[0]
 
 
 def flow_accumulation_grid(cells_df: DataFrame, ix_col: str = "ix",
@@ -702,25 +699,22 @@ def flow_accumulation_grid(cells_df: DataFrame, ix_col: str = "ix",
     computed by path-DOUBLING self-joins: after k rounds every path of
     length <= 2^k is present — O(log max_path_length) shuffles, the
     distributed-closure shape that survives a continental DEM, vs the
-    O(depth) rounds of step-by-step propagation.  Each round persists,
-    counts (the fixpoint test) and localCheckpoints to truncate lineage;
+    O(depth) rounds of step-by-step propagation (_d8_pair_closure);
     max_iters is a runaway bound (2^48 hops), never hit in practice.
 
     Not SQL-free-expressible in one query — the DuckDB twin uses a
     recursive CTE; the Spark side is the scale path."""
-    # flow is consumed twice (closure seed + final join) — persist it so
-    # the D8 join/window pipeline runs once (stream_order's lifecycle)
-    flow = d8_flow_grid(cells_df, ix_col, iy_col, value_col).persist()
-    pairs = _d8_pair_closure(flow, max_iters)
-    acc = pairs.groupBy("tx", "ty").agg(F.count("*").alias("n_upstream"))
-    out = (flow.join(acc, (flow.ix == acc.tx) & (flow.iy == acc.ty), "left")
-               .select(flow.ix, flow.iy, flow.v,
-                       F.coalesce("n_upstream", F.lit(0)).cast("long")
-                        .alias("n_upstream")))
-    out = out.localCheckpoint()
-    flow.unpersist()
-    pairs.unpersist()
-    return out
+    # flow feeds the closure seed and the final join: run the D8 pipeline once
+    with materialized(d8_flow_grid(cells_df, ix_col, iy_col,
+                                   value_col)) as flow:
+        with materialized(_d8_pair_closure(flow, max_iters)) as pairs:
+            acc = pairs.groupBy("tx", "ty").agg(F.count("*").alias("n_upstream"))
+            return (flow.join(acc, (flow.ix == acc.tx)
+                              & (flow.iy == acc.ty), "left")
+                        .select(flow.ix, flow.iy, flow.v,
+                                F.coalesce("n_upstream", F.lit(0))
+                                 .cast("long").alias("n_upstream"))
+                        .localCheckpoint())
 
 
 def local_morans_grid(cells_df: DataFrame, ix_col: str = "ix",
@@ -936,6 +930,35 @@ def mann_kendall_grid(series_df: DataFrame, ix_col: str = "ix",
                     z.alias("mk_z"), trend.alias("trend"))
 
 
+def _d8_root_pointers(cells_df: DataFrame, ix_col: str, iy_col: str,
+                      value_col: str, max_iters: int) -> DataFrame:
+    """Every cell's terminal pit and D8 hop count to it, (ix, iy, v, px,
+    py, d), by POINTER DOUBLING: each round composes the pointer table
+    with itself (ptr2(x) = ptr(ptr(x))) and ADDS the hop counts, so
+    after k rounds every cell points 2^k hops ahead (pits point to
+    themselves at distance 0) — O(log depth) rounds of ONE n-row
+    equi-join.  A pointer only moves past a non-pit (>= 1 hop), so an
+    unchanged observed hop total is the fixpoint test.  Shared by
+    watershed_basins_grid and flow_path_length_grid."""
+    flow = d8_flow_grid(cells_df, ix_col, iy_col, value_col)
+    ptr = flow.select("ix", "iy", "v",
+                      F.coalesce("to_ix", F.col("ix")).alias("px"),
+                      F.coalesce("to_iy", F.col("iy")).alias("py"),
+                      (F.col("flow_dir") > 0).cast("long").alias("d"))
+
+    def double(ptr: DataFrame) -> DataFrame:
+        tgt = ptr.select(F.col("ix").alias("px"), F.col("iy").alias("py"),
+                         F.col("px").alias("qx"), F.col("py").alias("qy"),
+                         F.col("d").alias("d2"))
+        return (ptr.join(tgt, ["px", "py"])
+                   .select("ix", "iy", "v", F.col("qx").alias("px"),
+                           F.col("qy").alias("py"),
+                           (F.col("d") + F.col("d2")).alias("d")))
+
+    return iterate(ptr, double, [F.sum("d").alias("hops")], max_iters,
+                   name="d8_root_pointers")[0]
+
+
 def watershed_basins_grid(cells_df: DataFrame, ix_col: str = "ix",
                           iy_col: str = "iy", value_col: str = "v",
                           max_iters: int = 48) -> DataFrame:
@@ -944,51 +967,17 @@ def watershed_basins_grid(cells_df: DataFrame, ix_col: str = "ix",
     the grid into drainage basins — the catchment companion to
     flow_accumulation_grid.
 
-    POINTER DOUBLING on the functional D8 graph: each round composes the
-    current pointer table with itself (ptr2(x) = ptr(ptr(x))), so after
-    k rounds every cell points 2^k hops ahead; pits point to themselves,
-    making the composition idempotent at the root.  O(log depth) rounds,
-    each ONE equi-join of an n-row table — the n*depth pair blow-up of
-    the ancestor closure never materializes, which is why this is the
-    scale shape for root-finding while flow_accumulation (which needs
-    path COUNTS, not roots) pays for the pair table.
-
-    Convergence is tested by counting unresolved rows (pointer not yet a
-    pit); the DuckDB twin walks the same paths with a recursive CTE."""
-    flow = d8_flow_grid(cells_df, ix_col, iy_col, value_col).persist()
-    ptr = (flow.select(
-        "ix", "iy",
-        F.coalesce("to_ix", F.col("ix")).alias("px"),
-        F.coalesce("to_iy", F.col("iy")).alias("py"),
-        (F.col("flow_dir") == 0).alias("done"))).persist()
-    pits = ptr.select(F.col("ix").alias("px"), F.col("iy").alias("py"),
-                      F.col("done").alias("p_done"))
-    for _ in range(max_iters):
-        unresolved = (ptr.join(pits, ["px", "py"])
-                         .filter(~F.col("p_done")).count())
-        if unresolved == 0:
-            break
-        nxt = ptr.select(F.col("ix").alias("px"), F.col("iy").alias("py"),
-                         F.col("px").alias("qx"), F.col("py").alias("qy"))
-        ptr2 = (ptr.join(nxt, ["px", "py"])
-                   .select("ix", "iy", F.col("qx").alias("px"),
-                           F.col("qy").alias("py"), "done")
-                   .localCheckpoint())
-        ptr.unpersist()
-        ptr = ptr2.persist()
-        pits = ptr.select(F.col("ix").alias("px"), F.col("iy").alias("py"),
-                          F.col("done").alias("p_done"))
-    out = flow.select("ix", "iy", "v").join(
-        ptr.select("ix", "iy", F.col("px").alias("basin_ix"),
-                   F.col("py").alias("basin_iy")), ["ix", "iy"])
-    out = out.select("ix", "iy", "v",
-                     F.col("basin_ix").cast("long").alias("basin_ix"),
-                     F.col("basin_iy").cast("long").alias("basin_iy"),
-                     (F.col("basin_ix") * 100000 + F.col("basin_iy"))
-                     .cast("long").alias("basin_id")).localCheckpoint()
-    flow.unpersist()
-    ptr.unpersist()
-    return out
+    POINTER DOUBLING on the functional D8 graph (_d8_root_pointers):
+    the n*depth pair blow-up of the ancestor closure never
+    materializes, which is why this is the scale shape for root-finding
+    while flow_accumulation (which needs path COUNTS, not roots) pays
+    for the pair table.  The DuckDB twin walks the same paths with a
+    recursive CTE."""
+    ptr = _d8_root_pointers(cells_df, ix_col, iy_col, value_col, max_iters)
+    return ptr.select("ix", "iy", "v", F.col("px").alias("basin_ix"),
+                      F.col("py").alias("basin_iy"),
+                      (F.col("px") * 100000 + F.col("py"))
+                      .cast("long").alias("basin_id"))
 
 
 def theil_sen_grid(series_df: DataFrame, ix_col: str = "ix",
@@ -1305,45 +1294,13 @@ def flow_path_length_grid(cells_df: DataFrame, ix_col: str = "ix",
     to its terminal pit (0 for pits), i.e. the hydrologic distance
     surface that pairs with watershed_basins_grid's labels.
 
-    Same pointer-doubling loop as the basin labeler, but the pointer
-    table carries an accumulated hop count that ADDS under composition
-    (d(x -> ptr2(x)) = d(x -> ptr(x)) + d(ptr(x) -> ptr2(x))), so the
-    exact path length of 2^k-step walks is available after k rounds —
+    The basin labeler's pointer-doubling closure (_d8_root_pointers)
+    carries the hop count that ADDS under composition, so the exact
+    path length of 2^k-step walks is available after k rounds —
     O(log depth) n-row equi-joins, no pair table.  The DuckDB twin
     step-walks the same graph with a recursive CTE counter."""
-    flow = d8_flow_grid(cells_df, ix_col, iy_col, value_col).persist()
-    ptr = (flow.select(
-        "ix", "iy",
-        F.coalesce("to_ix", F.col("ix")).alias("px"),
-        F.coalesce("to_iy", F.col("iy")).alias("py"),
-        (F.col("flow_dir") > 0).cast("long").alias("d"),
-        (F.col("flow_dir") == 0).alias("done"))).persist()
-    for _ in range(max_iters):
-        tgt = ptr.select(F.col("ix").alias("px"), F.col("iy").alias("py"),
-                         F.col("px").alias("qx"), F.col("py").alias("qy"),
-                         F.col("d").alias("d2"),
-                         F.col("done").alias("p_done"))
-        joined = ptr.join(tgt, ["px", "py"]).persist()
-        unresolved = joined.filter(~F.col("p_done")).count()
-        ptr2 = (joined.select("ix", "iy",
-                              F.col("qx").alias("px"),
-                              F.col("qy").alias("py"),
-                              (F.col("d") + F.col("d2")).alias("d"),
-                              "done")
-                      .localCheckpoint())
-        joined.unpersist()
-        ptr.unpersist()
-        ptr = ptr2.persist()
-        if unresolved == 0:
-            break
-    out = flow.select("ix", "iy", "v").join(
-        ptr.select("ix", "iy", F.col("d").alias("path_len")), ["ix", "iy"])
-    out = out.select("ix", "iy", "v",
-                     F.col("path_len").cast("long").alias("path_len")) \
-             .localCheckpoint()
-    flow.unpersist()
-    ptr.unpersist()
-    return out
+    ptr = _d8_root_pointers(cells_df, ix_col, iy_col, value_col, max_iters)
+    return ptr.select("ix", "iy", "v", F.col("d").alias("path_len"))
 
 
 def stream_order_shreve_grid(cells_df: DataFrame, ix_col: str = "ix",
@@ -1360,26 +1317,27 @@ def stream_order_shreve_grid(cells_df: DataFrame, ix_col: str = "ix",
     flow_accumulation_grid restricted to source rows: O(log depth)
     shuffles, no step-by-step propagation.  Sources are found with one
     anti-join (no cell drains into them).  All-integer output."""
-    flow = d8_flow_grid(cells_df, ix_col, iy_col, value_col).persist()
-    inflow = (flow.filter(F.col("flow_dir") > 0)
-                  .select(F.col("to_ix").alias("ix"),
-                          F.col("to_iy").alias("iy")).distinct())
-    sources = (flow.select("ix", "iy")
-                   .join(inflow, ["ix", "iy"], "left_anti"))
-    pairs = _d8_pair_closure(flow, max_iters)
-    up = (pairs.join(sources.withColumnRenamed("ix", "sx")
-                            .withColumnRenamed("iy", "sy"), ["sx", "sy"])
-               .groupBy("tx", "ty").agg(F.count("*").alias("n_src")))
-    out = (flow.join(up, (flow.ix == up.tx) & (flow.iy == up.ty), "left")
-               .join(sources.withColumn("is_src", F.lit(1)), ["ix", "iy"],
-                     "left")
-               .select(flow.ix, flow.iy, flow.v,
-                       (F.coalesce("n_src", F.lit(0))
-                        + F.coalesce("is_src", F.lit(0))).cast("long")
-                       .alias("shreve")))
-    out = out.localCheckpoint()
-    flow.unpersist()
-    return out
+    with materialized(d8_flow_grid(cells_df, ix_col, iy_col,
+                                   value_col)) as flow:
+        inflow = (flow.filter(F.col("flow_dir") > 0)
+                      .select(F.col("to_ix").alias("ix"),
+                              F.col("to_iy").alias("iy")).distinct())
+        sources = (flow.select("ix", "iy")
+                       .join(inflow, ["ix", "iy"], "left_anti"))
+        with materialized(_d8_pair_closure(flow, max_iters)) as pairs:
+            up = (pairs.join(sources.withColumnRenamed("ix", "sx")
+                                    .withColumnRenamed("iy", "sy"),
+                             ["sx", "sy"])
+                       .groupBy("tx", "ty").agg(F.count("*").alias("n_src")))
+            return (flow.join(up, (flow.ix == up.tx) & (flow.iy == up.ty),
+                              "left")
+                        .join(sources.withColumn("is_src", F.lit(1)),
+                              ["ix", "iy"], "left")
+                        .select(flow.ix, flow.iy, flow.v,
+                                (F.coalesce("n_src", F.lit(0))
+                                 + F.coalesce("is_src", F.lit(0)))
+                                .cast("long").alias("shreve"))
+                        .localCheckpoint())
 
 
 def distance_transform_grid(cells_df: DataFrame, ix_col: str = "ix",
@@ -1550,8 +1508,9 @@ def cost_distance_grid(cells_df: DataFrame, ix_col: str = "ix",
 
     Spark-first shape: Bellman-Ford relaxation — each round joins the
     frontier to its 4 neighbors (broadcast offset explode + equi-join
-    on the grid key) and min-folds into the running table; lineage is
-    truncated by localCheckpoint every few rounds.  Round count is the
+    on the grid key) and min-folds into the running table; costs only
+    fall and cells are only added, so the (cell count, cost total)
+    observed per round is the fixpoint test.  Round count is the
     hop count of the longest optimal path, NOT the cell count — bounded
     by the grid diameter, and each round is one bounded shuffle (the
     watershed/pointer-doubling family's shape).  With
@@ -1560,41 +1519,34 @@ def cost_distance_grid(cells_df: DataFrame, ix_col: str = "ix",
     configuration whose unrolled-SQL twin is a true hash oracle (the
     ivf_ann_exact trick); full runs converge-check each round."""
     spark = cells_df.sparkSession
-    g = (cells_df.select(F.col(ix_col).cast("long").alias("ix"),
-                         F.col(iy_col).cast("long").alias("iy"),
-                         F.col(cost_col).cast("long").alias("cost"),
-                         F.col(source_col).cast("boolean").alias("src"))
-         .persist())
+    g = cells_df.select(F.col(ix_col).cast("long").alias("ix"),
+                        F.col(iy_col).cast("long").alias("iy"),
+                        F.col(cost_col).cast("long").alias("cost"),
+                        F.col(source_col).cast("boolean").alias("src"))
     offs = spark.createDataFrame(
         [(1, 0), (-1, 0), (0, 1), (0, -1)], "dx long, dy long")
-    nbr = g.select(F.col("ix").alias("nx"), F.col("iy").alias("ny"),
-                   "cost")
-    dist = (g.filter("src")
-             .select("ix", "iy", F.lit(0).cast("long").alias("d"))
-             .localCheckpoint())
-    for rnd in range(max_rounds):
-        cand = (dist.crossJoin(F.broadcast(offs))
-                    .select((F.col("ix") + F.col("dx")).alias("nx"),
-                            (F.col("iy") + F.col("dy")).alias("ny"), "d")
-                    .join(nbr, ["nx", "ny"])
-                    .select(F.col("nx").alias("ix"),
-                            F.col("ny").alias("iy"),
-                            (F.col("d") + F.col("cost")).alias("d")))
-        new = (dist.unionByName(cand)
-                   .groupBy("ix", "iy").agg(F.min("d").alias("d"))
-                   .localCheckpoint())
-        if to_fixpoint:
-            improved = (new.join(dist.withColumnRenamed("d", "od"),
-                                 ["ix", "iy"], "left")
-                           .filter(F.col("od").isNull()
-                                   | (F.col("d") < F.col("od")))
-                           .limit(1).count())
-            dist = new
-            if improved == 0:
-                break
-        else:
-            dist = new
-    g.unpersist()
+    with materialized(g) as g:
+        nbr = g.select(F.col("ix").alias("nx"), F.col("iy").alias("ny"),
+                       "cost")
+
+        def relax(dist: DataFrame) -> DataFrame:
+            cand = (dist.crossJoin(F.broadcast(offs))
+                        .select((F.col("ix") + F.col("dx")).alias("nx"),
+                                (F.col("iy") + F.col("dy")).alias("ny"), "d")
+                        .join(nbr, ["nx", "ny"])
+                        .select(F.col("nx").alias("ix"),
+                                F.col("ny").alias("iy"),
+                                (F.col("d") + F.col("cost")).alias("d")))
+            return (dist.unionByName(cand)
+                        .groupBy("ix", "iy").agg(F.min("d").alias("d")))
+
+        dist, _ = iterate(
+            g.filter("src").select("ix", "iy",
+                                   F.lit(0).cast("long").alias("d")),
+            relax, [F.count("*").alias("cells"), F.sum("d").alias("acc")],
+            max_rounds,
+            until=operator.eq if to_fixpoint else lambda prev, cur: False,
+            name="cost_distance_grid")
     return dist.select("ix", "iy", F.col("d").cast("long").alias("acc"))
 
 
@@ -1622,66 +1574,65 @@ def viewshed_grid(cells_df: DataFrame, observer: "tuple[int, int]",
     continental scale, run per-tile with an observer-radius bound
     (max_k caps the explode)."""
     ox, oy = int(observer[0]), int(observer[1])
-    g = (cells_df.select(F.col(ix_col).cast("long").alias("ix"),
-                         F.col(iy_col).cast("long").alias("iy"),
-                         F.col(elev_col).cast("long").alias("elev"))
-         .persist())
-    eo = (g.filter((F.col("ix") == ox) & (F.col("iy") == oy))
-           .select((F.col("elev") + observer_height).alias("e_obs")))
-    t = (g.crossJoin(F.broadcast(eo))
-          .withColumn("dx", F.col("ix") - ox)
-          .withColumn("dy", F.col("iy") - oy)
-          .withColumn("kk", F.greatest(F.abs("dx"), F.abs("dy"))))
-    far = t.filter(F.col("kk") >= 2).filter(F.col("kk") <= max_k)
-    sgn = lambda c: (F.when(F.col(c) > 0, 1)
-                      .when(F.col(c) < 0, -1).otherwise(0))
-    s = (far.select("ix", "iy", "elev", "e_obs", "dx", "dy", "kk",
-                    F.explode(F.sequence(F.lit(1),
-                                         F.col("kk") - 1)).alias("k")))
-    xdom = F.abs(F.col("dx")) >= F.abs(F.col("dy"))
-    num = F.when(xdom, F.col("k") * F.col("dy")) \
-           .otherwise(F.col("k") * F.col("dx"))
-    s = s.withColumn("num", num.cast("long"))
-    rem = ((F.col("num") % F.col("kk")) + F.col("kk")) % F.col("kk")
-    s = s.withColumn("rem", rem.cast("long"))
-    # exact: kk divides num - rem, so integer div loses nothing
-    mlo = F.expr("(num - rem) div kk")
-    s = (s
-          .withColumn("maj_x", F.when(xdom, ox + F.col("k") * sgn("dx")))
-          .withColumn("maj_y", F.when(~xdom, oy + F.col("k") * sgn("dy")))
-          .withColumn("lo_x", F.when(xdom, F.col("maj_x"))
-                               .otherwise((ox + mlo).cast("long")))
-          .withColumn("lo_y", F.when(xdom, (oy + mlo).cast("long"))
-                               .otherwise(F.col("maj_y")))
-          .withColumn("hi_x", F.when(xdom, F.col("lo_x"))
-                               .otherwise(F.col("lo_x") + 1))
-          .withColumn("hi_y", F.when(xdom, F.col("lo_y") + 1)
-                               .otherwise(F.col("lo_y"))))
-    elo = g.select(F.col("ix").alias("lo_x"), F.col("iy").alias("lo_y"),
-                   F.col("elev").alias("e_lo"))
-    ehi = g.select(F.col("ix").alias("hi_x"), F.col("iy").alias("hi_y"),
-                   F.col("elev").alias("e_hi"))
-    s = (s.join(elo, ["lo_x", "lo_y"], "left")
-          .join(ehi, ["hi_x", "hi_y"], "left"))
-    ray_e = (F.coalesce("e_lo", F.lit(1 << 40)) * (F.col("kk") - F.col("rem"))
-             + F.when(F.col("rem") > 0,
-                      F.coalesce("e_hi", F.lit(1 << 40)) * F.col("rem"))
-                .otherwise(F.lit(0)))
-    sight = (F.col("e_obs") * F.col("kk")
-             + (F.col("elev") - F.col("e_obs")) * F.col("k"))
-    blocked = (s.withColumn("blk", (ray_e > sight).cast("long"))
-                .groupBy("ix", "iy")
-                .agg(F.sum("blk").cast("long").alias("n_block")))
-    out = (t.select("ix", "iy", "kk")
-            .join(blocked, ["ix", "iy"], "left")
-            .select("ix", "iy",
-                    F.coalesce("n_block", F.lit(0)).cast("long")
-                     .alias("n_block"))
-            .withColumn("visible", F.col("n_block") == 0)
-            .drop("kk"))
-    out = out.localCheckpoint()
-    g.unpersist()
-    return out
+    g = cells_df.select(F.col(ix_col).cast("long").alias("ix"),
+                        F.col(iy_col).cast("long").alias("iy"),
+                        F.col(elev_col).cast("long").alias("elev"))
+    with materialized(g) as g:
+        eo = (g.filter((F.col("ix") == ox) & (F.col("iy") == oy))
+               .select((F.col("elev") + observer_height).alias("e_obs")))
+        t = (g.crossJoin(F.broadcast(eo))
+              .withColumn("dx", F.col("ix") - ox)
+              .withColumn("dy", F.col("iy") - oy)
+              .withColumn("kk", F.greatest(F.abs("dx"), F.abs("dy"))))
+        far = t.filter(F.col("kk") >= 2).filter(F.col("kk") <= max_k)
+        sgn = lambda c: (F.when(F.col(c) > 0, 1)
+                          .when(F.col(c) < 0, -1).otherwise(0))
+        s = (far.select("ix", "iy", "elev", "e_obs", "dx", "dy", "kk",
+                        F.explode(F.sequence(F.lit(1),
+                                             F.col("kk") - 1)).alias("k")))
+        xdom = F.abs(F.col("dx")) >= F.abs(F.col("dy"))
+        num = F.when(xdom, F.col("k") * F.col("dy")) \
+               .otherwise(F.col("k") * F.col("dx"))
+        s = s.withColumn("num", num.cast("long"))
+        rem = ((F.col("num") % F.col("kk")) + F.col("kk")) % F.col("kk")
+        s = s.withColumn("rem", rem.cast("long"))
+        # exact: kk divides num - rem, so integer div loses nothing
+        mlo = F.expr("(num - rem) div kk")
+        s = (s
+              .withColumn("maj_x", F.when(xdom, ox + F.col("k") * sgn("dx")))
+              .withColumn("maj_y", F.when(~xdom, oy + F.col("k") * sgn("dy")))
+              .withColumn("lo_x", F.when(xdom, F.col("maj_x"))
+                                   .otherwise((ox + mlo).cast("long")))
+              .withColumn("lo_y", F.when(xdom, (oy + mlo).cast("long"))
+                                   .otherwise(F.col("maj_y")))
+              .withColumn("hi_x", F.when(xdom, F.col("lo_x"))
+                                   .otherwise(F.col("lo_x") + 1))
+              .withColumn("hi_y", F.when(xdom, F.col("lo_y") + 1)
+                                   .otherwise(F.col("lo_y"))))
+        elo = g.select(F.col("ix").alias("lo_x"), F.col("iy").alias("lo_y"),
+                       F.col("elev").alias("e_lo"))
+        ehi = g.select(F.col("ix").alias("hi_x"), F.col("iy").alias("hi_y"),
+                       F.col("elev").alias("e_hi"))
+        s = (s.join(elo, ["lo_x", "lo_y"], "left")
+              .join(ehi, ["hi_x", "hi_y"], "left"))
+        ray_e = (F.coalesce("e_lo", F.lit(1 << 40))
+                 * (F.col("kk") - F.col("rem"))
+                 + F.when(F.col("rem") > 0,
+                          F.coalesce("e_hi", F.lit(1 << 40)) * F.col("rem"))
+                    .otherwise(F.lit(0)))
+        sight = (F.col("e_obs") * F.col("kk")
+                 + (F.col("elev") - F.col("e_obs")) * F.col("k"))
+        blocked = (s.withColumn("blk", (ray_e > sight).cast("long"))
+                    .groupBy("ix", "iy")
+                    .agg(F.sum("blk").cast("long").alias("n_block")))
+        out = (t.select("ix", "iy", "kk")
+                .join(blocked, ["ix", "iy"], "left")
+                .select("ix", "iy",
+                        F.coalesce("n_block", F.lit(0)).cast("long")
+                         .alias("n_block"))
+                .withColumn("visible", F.col("n_block") == 0)
+                .drop("kk"))
+        return out.localCheckpoint()
 
 
 def polygon_metrics(vertices: DataFrame, poly_col: str = "poly_id",
@@ -1828,10 +1779,10 @@ def dbscan_points(points: DataFrame, eps: int, min_pts: int,
 
     Scale shape: candidate pairs come from a GRID-BUCKET equi-join
     (cell = eps, 3x3 neighborhood exploded on one side — never
-    all-pairs); components resolve by min-label propagation PLUS
-    pointer jumping (label <- label(label)) per round, so chains
-    collapse in O(log diameter) n-row joins, the watershed pointer-
-    doubling shape.  Integer coordinates keep every comparison exact —
+    all-pairs); components of the core-core edges resolve through
+    fixpoint.connected_components (min-label propagation + pointer
+    jumping: O(log diameter) n-row joins, at most max_iters).  Integer
+    coordinates keep every comparison exact —
     the DuckDB oracle walks the same edges with a recursive CTE."""
     p = points.select(F.col(id_col).cast("long").alias("pid"),
                       F.col(x_col).cast("long").alias("x"),
@@ -1853,45 +1804,28 @@ def dbscan_points(points: DataFrame, eps: int, min_pts: int,
           + (F.col("y") - F.col("qy")) * (F.col("y") - F.col("qy")))
     pairs = (probe.join(b, ["bx", "by"])
                   .filter(d2 <= F.lit(eps * eps))
-                  .select("pid", "qid").persist())
-    counts = pairs.groupBy("pid").agg(F.count("*").alias("n_nbr"))
-    core = counts.filter(F.col("n_nbr") >= min_pts).select("pid")
-    edges = (pairs.join(core.withColumnRenamed("pid", "qid"), "qid")
-                  .join(core, "pid").select("pid", "qid"))
-    lbl = core.select("pid", F.col("pid").alias("lbl")).persist()
-    for _ in range(max_iters):
-        nb_min = (edges.join(lbl.withColumnRenamed("pid", "qid")
-                                .withColumnRenamed("lbl", "qlbl"), "qid")
-                       .groupBy("pid").agg(F.min("qlbl").alias("nb_lbl")))
-        stepped = (lbl.join(nb_min, "pid", "left")
-                      .select("pid", F.least(
-                          "lbl", F.coalesce("nb_lbl", "lbl")).alias("lbl")))
-        # pointer jump: label <- label's label (labels are core pids)
-        jump = stepped.select(F.col("pid").alias("lbl"),
-                              F.col("lbl").alias("jlbl"))
-        nxt = (stepped.join(jump, "lbl")
-                      .select("pid", F.col("jlbl").alias("lbl"))
-                      .localCheckpoint())
-        changed = (nxt.withColumnRenamed("lbl", "nlbl").join(lbl, "pid")
-                      .filter(F.col("nlbl") != F.col("lbl")).count())
-        lbl.unpersist()
-        lbl = nxt.persist()
-        if changed == 0:
-            break
-    border = (pairs.join(core, "pid", "left_anti")
-                   .join(lbl.withColumnRenamed("pid", "qid")
-                            .withColumnRenamed("lbl", "qlbl"), "qid")
-                   .groupBy("pid").agg(F.min("qlbl").alias("blbl")))
-    out = (p.join(lbl, "pid", "left")
-            .join(border, "pid", "left")
-            .select("pid", "x", "y",
-                    F.col("lbl").isNotNull().alias("is_core"),
-                    F.coalesce("lbl", "blbl", F.lit(-1)).cast("long")
-                     .alias("cluster")))
-    res = out.localCheckpoint()
-    pairs.unpersist()
-    lbl.unpersist()
-    return res
+                  .select("pid", "qid"))
+    with materialized(pairs) as pairs:
+        counts = pairs.groupBy("pid").agg(F.count("*").alias("n_nbr"))
+        core = counts.filter(F.col("n_nbr") >= min_pts).select("pid")
+        # self pairs are in `pairs`, so every core point is a node here
+        edges = (pairs.join(core.withColumnRenamed("pid", "qid"), "qid")
+                      .join(core, "pid")
+                      .select(F.col("pid").alias("u"),
+                              F.col("qid").alias("v")))
+        with materialized(connected_components(edges, max_iters)) as cc:
+            lbl = cc.select(F.col("u").alias("pid"), F.col("lab").alias("lbl"))
+            border = (pairs.join(core, "pid", "left_anti")
+                           .join(lbl.withColumnRenamed("pid", "qid")
+                                    .withColumnRenamed("lbl", "qlbl"), "qid")
+                           .groupBy("pid").agg(F.min("qlbl").alias("blbl")))
+            return (p.join(lbl, "pid", "left")
+                     .join(border, "pid", "left")
+                     .select("pid", "x", "y",
+                             F.col("lbl").isNotNull().alias("is_core"),
+                             F.coalesce("lbl", "blbl", F.lit(-1))
+                              .cast("long").alias("cluster"))
+                     .localCheckpoint())
 
 
 # ---------------------------------------------------------------------------
@@ -2206,8 +2140,8 @@ def rdp_simplify(traj_df: DataFrame, eps2_num: int, eps2_den: int = 1,
     is two window passes + one argmax aggregate, so a round costs the
     same for a million trajectories as for one (per-traj recursion
     depth never serializes across the fleet).  Rounds stop at
-    `max_iters` or at fixpoint (no chord splits — checked by one
-    count() per round; typical depth is O(log n) for natural lines).
+    `max_iters` or at fixpoint (no chord splits: the kept-point count
+    observed per round stops growing; typical depth is O(log n)).
     Degenerate chords (closed rings / repeated endpoints, |AB|^2 = 0)
     fall back to point-to-point distance from A, the standard RDP
     convention.
@@ -2221,10 +2155,6 @@ def rdp_simplify(traj_df: DataFrame, eps2_num: int, eps2_den: int = 1,
                        F.col(x_col).cast("long").alias("x"),
                        F.col(y_col).cast("long").alias("y"))
     wt = Window.partitionBy("tid")
-    pts = t.withColumn(
-        "keep", (F.col("seq") == F.min("seq").over(wt))
-                | (F.col("seq") == F.max("seq").over(wt))).persist()
-    pts.count()
     wup = (Window.partitionBy("tid").orderBy("seq")
                  .rowsBetween(Window.unboundedPreceding, 0))
     wdn = (Window.partitionBy("tid").orderBy(F.desc("seq"))
@@ -2232,10 +2162,8 @@ def rdp_simplify(traj_df: DataFrame, eps2_num: int, eps2_den: int = 1,
     kept_seq = F.when(F.col("keep"), F.col("seq"))
     kept_x = F.when(F.col("keep"), F.col("x"))
     kept_y = F.when(F.col("keep"), F.col("y"))
-    split_any = True
-    rounds = 0
-    while split_any and rounds < max_iters:
-        rounds += 1
+
+    def split(pts: DataFrame) -> DataFrame:
         # bracket every interior point by its nearest kept neighbors
         br = (pts.withColumn("ls", F.max(kept_seq).over(wup))
                  .withColumn("lx", F.last(kept_x, True).over(wup))
@@ -2262,30 +2190,24 @@ def rdp_simplify(traj_df: DataFrame, eps2_num: int, eps2_den: int = 1,
                            F.col("m.num").alias("num"), "den")
                    .filter(F.col("num") * eps2_den
                            > F.lit(eps2_num) * F.col("den")))
-        # persist the split set: without it the bracket-window lineage
-        # would run twice per round (once for this count, once inside
-        # the next pts materialization)
-        far = far.persist()
-        n_split = far.count()
-        split_any = n_split > 0
-        if split_any:
-            new = (pts.join(far.select("tid", "seq").withColumn(
-                                "nk", F.lit(True)),
-                            ["tid", "seq"], "left")
-                      .withColumn("keep", F.col("keep")
-                                  | F.coalesce("nk", F.lit(False)))
-                      .drop("nk").persist())
-            new.count()
-            pts.unpersist()
-            pts = new
-        far.unpersist()
-    out = pts.filter("keep").select(
-        F.col("tid").alias(traj_id_col), "seq", "x", "y",
-        F.lit(not split_any).alias("converged"))
-    # materialize before releasing the loop cache
-    out = out.localCheckpoint(eager=True)
-    pts.unpersist()
-    return out
+        return (pts.join(far.select("tid", "seq").withColumn(
+                             "nk", F.lit(True)),
+                         ["tid", "seq"], "left")
+                   .withColumn("keep", F.col("keep")
+                               | F.coalesce("nk", F.lit(False)))
+                   .drop("nk"))
+
+    ends = t.withColumn(
+        "keep", (F.col("seq") == F.min("seq").over(wt))
+                | (F.col("seq") == F.max("seq").over(wt)))
+    pts, converged = iterate(
+        ends, split, [F.sum(F.col("keep").cast("long")).alias("kept")],
+        max_iters, name="rdp_simplify")
+    with materialized(pts):
+        return (pts.filter("keep")
+                   .select(F.col("tid").alias(traj_id_col), "seq", "x", "y",
+                           F.lit(converged).alias("converged"))
+                   .localCheckpoint(eager=True))
 
 
 # ---------------------------------------------------------------------------
@@ -2553,12 +2475,13 @@ def least_cost_path_grid(cells_df: DataFrame, target: "tuple[int, int]",
     Shape at scale: sequential backtracking would take path-length
     rounds; instead the parent FOREST is binary-lifted — J_{k+1} =
     J_k JOIN J_k gives the 2^(k+1)-ancestor of every cell in one
-    self-join — and the ancestor SET of the target accumulates by
-    A := A UNION J_k[A] from the high bit down (every path offset is a
-    subset sum of powers of two), so a 2^13-cell path resolves in ~26
-    n-row equi-joins instead of 8192 rounds.  localCheckpoint per
-    level (iterative-lineage contract).  Returns the path's (ix, iy,
-    acc) rows, target and reached source included."""
+    self-join — and in the same round the target's path cells within
+    2^k - 1 hops grow as A_{k+1} = A_k UNION J_k[A_k] (one tagged
+    fixpoint.iterate state; A stops growing at the self-looping
+    source), so a 2^13-cell path resolves in 14 rounds instead of
+    8192; max_log2 + 1 rounds cover paths of < 2^(max_log2+1) cells.
+    Returns the path's (ix, iy, acc) rows, target and reached source
+    included."""
     acc = cost_distance_grid(cells_df, ix_col, iy_col, cost_col,
                              source_col, max_rounds=acc_rounds,
                              to_fixpoint=to_fixpoint)
@@ -2566,53 +2489,58 @@ def least_cost_path_grid(cells_df: DataFrame, target: "tuple[int, int]",
                         F.col(iy_col).cast("long").alias("iy"),
                         F.col(cost_col).cast("long").alias("cost"),
                         F.col(source_col).cast("boolean").alias("src"))
-    a = acc.join(g, ["ix", "iy"]).persist()
     offs = cells_df.sparkSession.createDataFrame(
         [(1, 0), (-1, 0), (0, 1), (0, -1)], "dx long, dy long")
-    nb = a.select(F.col("ix").alias("ux"), F.col("iy").alias("uy"),
-                  F.col("acc").alias("uacc"))
-    cand = (a.crossJoin(F.broadcast(offs))
-             .withColumn("ux", F.col("ix") + F.col("dx"))
-             .withColumn("uy", F.col("iy") + F.col("dy"))
-             .join(nb, ["ux", "uy"])
-             .filter(F.col("uacc") + F.col("cost") == F.col("acc")))
-    best = (cand.groupBy("ix", "iy")
-                .agg(F.min(F.struct("ux", "uy")).alias("p"))
-                .select("ix", "iy", F.col("p.ux").alias("px"),
-                        F.col("p.uy").alias("py")))
-    # sources (and any cell with no qualifying parent) self-loop
-    parent = (a.select("ix", "iy", "src")
-               .join(best, ["ix", "iy"], "left")
-               .select("ix", "iy",
-                       F.when(F.col("src") | F.col("px").isNull(),
-                              F.col("ix")).otherwise(F.col("px"))
-                        .alias("px"),
-                       F.when(F.col("src") | F.col("py").isNull(),
-                              F.col("iy")).otherwise(F.col("py"))
-                        .alias("py"))
-               .localCheckpoint(eager=True))
-    jumps = [parent]
-    for _ in range(max_log2):
-        j = jumps[-1]
-        j2 = (j.join(j.select(F.col("ix").alias("px"),
-                              F.col("iy").alias("py"),
-                              F.col("px").alias("qx"),
-                              F.col("py").alias("qy")), ["px", "py"])
-               .select("ix", "iy", F.col("qx").alias("px"),
-                       F.col("qy").alias("py"))
-               .localCheckpoint(eager=True))
-        jumps.append(j2)
-    tx, ty = int(target[0]), int(target[1])
-    anc = (a.sparkSession.createDataFrame([(tx, ty)], "ix long, iy long")
-           .localCheckpoint(eager=True))
-    for j in reversed(jumps):
-        hop = (anc.join(j, ["ix", "iy"])
-                  .select(F.col("px").alias("ix"), F.col("py").alias("iy")))
-        anc = (anc.unionByName(hop).distinct()
-                  .localCheckpoint(eager=True))
-    out = anc.join(acc, ["ix", "iy"]).select("ix", "iy", "acc")
-    a.unpersist()
-    return out
+    with materialized(acc.join(g, ["ix", "iy"])) as a:
+        nb = a.select(F.col("ix").alias("ux"), F.col("iy").alias("uy"),
+                      F.col("acc").alias("uacc"))
+        cand = (a.crossJoin(F.broadcast(offs))
+                 .withColumn("ux", F.col("ix") + F.col("dx"))
+                 .withColumn("uy", F.col("iy") + F.col("dy"))
+                 .join(nb, ["ux", "uy"])
+                 .filter(F.col("uacc") + F.col("cost") == F.col("acc")))
+        best = (cand.groupBy("ix", "iy")
+                    .agg(F.min(F.struct("ux", "uy")).alias("p"))
+                    .select("ix", "iy", F.col("p.ux").alias("px"),
+                            F.col("p.uy").alias("py")))
+        # sources (and any cell with no qualifying parent) self-loop
+        parent = (a.select("ix", "iy", "src")
+                   .join(best, ["ix", "iy"], "left")
+                   .select("ix", "iy",
+                           F.when(F.col("src") | F.col("px").isNull(),
+                                  F.col("ix")).otherwise(F.col("px"))
+                            .alias("px"),
+                           F.when(F.col("src") | F.col("py").isNull(),
+                                  F.col("iy")).otherwise(F.col("py"))
+                            .alias("py"),
+                           F.lit(False).alias("anc")))
+        target_row = a.sparkSession.createDataFrame(
+            [(int(target[0]), int(target[1]), None, None, True)],
+            "ix long, iy long, px long, py long, anc boolean")
+
+        def lift(st: DataFrame) -> DataFrame:
+            j = st.filter(~F.col("anc"))
+            anc = st.filter("anc").select("ix", "iy")
+            j2 = (j.join(j.select(F.col("ix").alias("px"),
+                                  F.col("iy").alias("py"),
+                                  F.col("px").alias("qx"),
+                                  F.col("py").alias("qy")), ["px", "py"])
+                   .select("ix", "iy", F.col("qx").alias("px"),
+                           F.col("qy").alias("py"), "anc"))
+            hop = (anc.join(j, ["ix", "iy"])
+                      .select(F.col("px").alias("ix"),
+                              F.col("py").alias("iy")))
+            return j2.unionByName(
+                anc.unionByName(hop).distinct()
+                   .select("ix", "iy", F.lit(None).cast("long").alias("px"),
+                           F.lit(None).cast("long").alias("py"),
+                           F.lit(True).alias("anc")))
+
+        st, _ = iterate(parent.unionByName(target_row), lift,
+                        [F.sum(F.col("anc").cast("long")).alias("path")],
+                        max_log2 + 1, name="least_cost_path_grid")
+    return (st.filter("anc").select("ix", "iy")
+              .join(acc, ["ix", "iy"]).select("ix", "iy", "acc"))
 
 
 def skew_profile(df: DataFrame, key_cols: "Sequence[str]",

@@ -570,7 +570,7 @@ def _cosine_chain_col(va, vb, dims: int):
     accumulator, incl. the -0.0 edge), one multiply per term, each norm a
     sqrt of the same chain, and a zero denominator yields NULL (Spark's
     non-ANSI x/0 — the kernel's explicit zero-norm nan).  NULL vectors
-    propagate to NULL cosine through the element_at chain.
+    propagate to NULL cosine through the getItem chain (0-based).
 
     Why: the kernel moves BOTH 8*dims-byte vectors of EVERY row across
     the JVM<->Python Arrow boundary — for pair-fanout consumers
@@ -1500,15 +1500,15 @@ def cluster_from_pairs(df: DataFrame, pairs: DataFrame,
     graph; rows with no candidate pair are their own singleton cluster;
     is_keeper marks exactly one row per cluster (the minimum id).
 
-    100 TB shape: the CC iteration (rasterops._cc_labels_df — min-label
-    propagation + pointer jumping, O(log diameter) rounds) shuffles only
-    the PAIR graph, which is bounded by genuinely-similar mass and
+    100 TB shape: fixpoint.connected_components (min-label propagation
+    + pointer jumping, O(log diameter) rounds) shuffles only the PAIR
+    graph, which is bounded by genuinely-similar mass and
     orders of magnitude smaller than the corpus; the corpus is touched
     once by the pair detector and once by the final label equi-join."""
-    from .rasterops import _cc_labels_df
+    from .fixpoint import connected_components
 
     edges = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    lab = _cc_labels_df(edges)
+    lab = connected_components(edges)
     labeled = (df.select(F.col(id_col))
                  .join(lab.withColumnRenamed("u", id_col), id_col, "left")
                  .select(F.col(id_col),

@@ -5853,7 +5853,7 @@ def q_canny_edges(spark, sf_dir):
     step-edge image built from lineitem: a 200-DN vertical step at
     px=16 plus %16 aggregate noise.  Sobel -> integer-sector NMS ->
     double threshold (squared: 5k / 200k) -> hysteresis as DISTRIBUTED
-    connected components (_cc_labels_df min-label propagation) — weak
+    connected components (fixpoint.connected_components) — weak
     pixels survive only when 8-linked to the strong step.  Oracle:
     identical folds in SQL with the hysteresis flood as a recursive
     CTE from the strong set."""

@@ -4,7 +4,7 @@ filter, raster->vector bridge."""
 import numpy as np
 import pytest
 
-from data_cube_utilities_spark.operators import rasterops
+from data_cube_utilities_spark.operators import fixpoint, rasterops
 
 
 def test_label_regions_two_blobs():
@@ -104,15 +104,16 @@ def test_vectorize_regions_global_tiled_equals_monolithic(spark):
 
 
 def test_cc_labels_df_min_label(spark):
-    """_cc_labels_df: every node converges to the component minimum, incl.
-    a long chain (pointer-jump convergence) and disjoint components."""
+    """fixpoint.connected_components: every node converges to the
+    component minimum, incl. a long chain (pointer-jump convergence) and
+    disjoint components."""
     from pyspark.sql import functions as F  # noqa: F401
     # chain 10->11->...->29 (diameter 19), triangle {100,101,102}, pair
     edges = [(i, i + 1) for i in range(10, 29)] \
         + [(100, 101), (101, 102), (100, 102), (7, 5)]
     df = spark.createDataFrame(edges, "u long, v long")
     lab = {r.u: r.lab
-           for r in rasterops._cc_labels_df(df).collect()}
+           for r in fixpoint.connected_components(df).collect()}
     for n in range(10, 30):
         assert lab[n] == 10
     for n in (100, 101, 102):

@@ -191,19 +191,11 @@ def test_knn_cells_matches_brute(spark):
     assert b == g
 
 
-def test_knn_cells_releases_target_cache(spark):
+def test_knn_cells_releases_target_cache(spark, cached_ids):
     # VERDICT r1: the persisted target table must not outlive knn_cells —
     # long-lived sessions otherwise accumulate cached tables.
     q = points_pdf(20, seed=61)
     t = points_pdf(400, seed=62)
-    def cached_ids():
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        out, it = {}, m.entrySet().iterator()
-        while it.hasNext():
-            e = it.next()
-            out[int(e.getKey())] = e.getValue().toString()
-        return out
-
     before = cached_ids()
     out = spatial.knn_cells(spark.createDataFrame(q),
                             spark.createDataFrame(t), k=3, res=6)
