@@ -1,5 +1,8 @@
-"""One lifecycle for iterative operators: the fixpoint loop, the one-shot
-materialization around it, and the connected-components routine.
+"""One materialize/release lifecycle: the fixpoint loop, `materialized`
+(a table several branches of one operator share, released on exit, also
+on error), `checkpoint` (an operator's eager result) and the
+connected-components routine.  No other module persists, caches or
+unpersists.
 
 An iterated plan must have its lineage cut every round (an unrolled plan
 overflows Catalyst's tree by round ~15).  `iterate` cuts it with ONE
@@ -36,9 +39,10 @@ def _drop(sc, rdd_id: int) -> None:
     sc._jsc.sc().unpersistRDD(rdd_id, False)
 
 
-def _checkpoint(df: DataFrame) -> DataFrame:
+def checkpoint(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint.  A job that fails leaves its half-made
-    checkpoint RDD registered; drop it before re-raising."""
+    checkpoint RDD registered; drop it before re-raising.  The result is
+    released with the returned DataFrame object (or by `materialized`)."""
     sc = df.sparkSession.sparkContext
     before = set(sc._jsc.getPersistentRDDs().keySet())
     try:
@@ -70,7 +74,7 @@ def iterate(state: DataFrame, step: Callable[[DataFrame], DataFrame],
     ran out first.  Release the final state with `materialized`."""
     def observed(df: DataFrame):
         obs = Observation()
-        ck = _checkpoint(df.observe(obs, *stats))
+        ck = checkpoint(df.observe(obs, *stats))
         return ck, obs.get
 
     sc = state.sparkSession.sparkContext
@@ -102,7 +106,7 @@ def materialized(df: DataFrame) -> Iterator[DataFrame]:
     release it on exit, also on error.  A local checkpoint (e.g. the
     state `iterate` returns) is used as it is."""
     if _checkpoint_id(df) is None:
-        df = _checkpoint(df)
+        df = checkpoint(df)
     try:
         yield df
     finally:

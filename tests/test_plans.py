@@ -1,6 +1,8 @@
 """Physical-plan assertions: the optimizer behaviors the engine relies on
 at 100TB must actually appear in the plans (SURVEY.md section 4)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +14,12 @@ SF = "/root/testdata/sf0.01"
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def nodes(description: str, name: str) -> int:
+    """Count the `name` operators of a plan description (one numbered
+    details entry per node, shared by the final and the initial plan)."""
+    return len(re.findall(rf"^\(\d+\) {name}\b", description, re.M))
 
 
 def test_filter_pushdown_reaches_parquet(spark):
@@ -114,27 +122,24 @@ def test_band_indices_is_double_not_decimal(spark):
     assert "Window" not in plan_of(df)
 
 
-def test_lsh_pair_joins_read_cached_signatures(spark):
-    """The pair operators' self-joins must consume the persisted signature
-    table on BOTH sides — without it each side re-runs the full signature
-    pipeline (no ReusedExchange when one side broadcasts), doubling the
-    dominant cost (r3: minhash bench wall 3.45s -> 0.71s)."""
+def test_lsh_pair_joins_read_cached_signatures(spark, executed_plans):
+    """The pair operators' self-joins must consume the checkpointed
+    signature table on BOTH sides — without it each side re-runs the full
+    signature pipeline (no ReusedExchange when one side broadcasts),
+    doubling the dominant cost (r3: minhash bench wall 3.45s -> 0.71s)."""
     from data_cube_utilities_spark.operators import textops
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(50)
-    # release_cache=False hands back the lazy plan (default checkpoints
-    # the result and releases the cache, hiding the join structure)
-    plan = plan_of(textops.minhash_lsh_pairs(docs, release_cache=False))
-    # (the cached relation's stored description still mentions md5, so the
-    # scan count — not expression text — is the reuse signal)
-    assert plan.count("InMemoryTableScan") >= 2
+    _, plans = executed_plans(
+        lambda: textops.minhash_lsh_pairs(docs).collect())
+    # the pair join reads the checkpoint twice and never the corpus
+    assert nodes(plans[-1], "Scan ExistingRDD") >= 2
+    assert nodes(plans[-1], "Scan parquet") == 0
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(50)
-    eplan = plan_of(textops.embedding_near_dup_pairs(
-        emb, dims=64, release_cache=False))
-    assert eplan.count("InMemoryTableScan") >= 2
-    # release_cache=False hands cache ownership to the caller — this test
-    spark.catalog.clearCache()
+    _, plans = executed_plans(lambda: textops.embedding_near_dup_pairs(
+        emb, dims=64).collect())
+    assert nodes(plans[-1], "Scan ExistingRDD") >= 2
 
 
 def test_text_fanout_runs_at_full_parallelism(spark, tmp_path):
@@ -227,6 +232,11 @@ def test_group_b_operators_release_their_caches(spark, cached_ids):
                                                  threshold=0.3),
         lambda: textops.lsh_ann_topk_batch(emb, [0, 7], dims=64, k=3),
         lambda: textops.lsh_ann_topk(emb, query_id=0, dims=64, k=3),
+        lambda: textops.hash_near_dup_pairs(
+            docs.select("doc_id", F.xxhash64("text").alias("phash"))),
+        lambda: textops.pack_chunks(docs, window=64, n_shards=8),
+        lambda: textops.char_bigram_familiarity(docs),
+        lambda: textops.containment_dedup_pairs(docs, 1 << 19),
     ]
     for call in calls:
         before = cached_ids()
@@ -236,6 +246,35 @@ def test_group_b_operators_release_their_caches(spark, cached_ids):
         leaked = {k: v for k, v in new.items()
                   if "localCheckpoint" not in v}
         assert not leaked, f"leaked caches: {leaked}"
+
+
+def test_group_b_operators_release_their_caches_on_failure(spark,
+                                                           cached_ids):
+    """A failing job, or an argument rejected mid-build, leaves neither a
+    persisted RDD nor a CacheManager entry behind: the shared table (and
+    a half-made result checkpoint) is released on every exit path."""
+    from data_cube_utilities_spark.operators import textops
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(60)
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(60)
+    boom = F.raise_error(F.lit("job failed"))
+    calls = [
+        # the result job fails
+        (Exception, lambda: textops.ngram_jaccard_pairs(docs,
+                                                        threshold=boom)),
+        (Exception, lambda: textops.containment_dedup_pairs(docs, boom)),
+        # the shared table's own job fails
+        (Exception, lambda: textops.pack_chunks(docs, n_tokens=boom)),
+        # an argument the operator rejects (probe_bits is 0 or 1)
+        (ValueError, lambda: textops.lsh_ann_topk_batch(
+            emb, [0, 7], dims=64, probe_bits=2)),
+    ]
+    for exc, call in calls:
+        before = cached_ids(), cache_manager.numCachedEntries()
+        with pytest.raises(exc):
+            call()
+        assert (cached_ids(), cache_manager.numCachedEntries()) == before
 
 
 def test_contamination_probe_side_broadcasts(spark):
@@ -250,13 +289,15 @@ def test_contamination_probe_side_broadcasts(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_familiarity_model_broadcasts(spark):
+def test_familiarity_model_broadcasts(spark, executed_plans):
     from data_cube_utilities_spark.operators import textops
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = plan_of(textops.char_bigram_familiarity(docs, release_cache=False))
+    _, plans = executed_plans(
+        lambda: textops.char_bigram_familiarity(docs))
+    plan = plans[-1]                         # the result's checkpoint job
     assert "BroadcastExchange" in plan       # the bigram count table
-    assert "InMemoryTableScan" in plan       # the persisted bigram fan-out
+    assert nodes(plan, "Scan ExistingRDD") == 2  # the bigram fan-out, once
 
 
 def test_deterministic_sample_is_shuffle_free(spark):
@@ -268,15 +309,17 @@ def test_deterministic_sample_is_shuffle_free(spark):
     assert "Exchange" not in plan
 
 
-def test_pack_chunks_single_scan_and_broadcast_base(spark):
+def test_pack_chunks_single_scan_and_broadcast_base(spark, executed_plans):
     from data_cube_utilities_spark.operators import textops
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = plan_of(textops.pack_chunks(docs, window=64, n_shards=8,
-                                       release_cache=False))
-    # both prefix-sum branches read the persisted (doc_id, n, shard)
-    # projection -> the corpus parquet is scanned once at cache fill
-    assert plan.count("InMemoryTableScan") == 2
+    _, plans = executed_plans(
+        lambda: textops.pack_chunks(docs, window=64, n_shards=8))
+    # both prefix-sum branches read the materialized (doc_id, n, shard)
+    # projection -> the corpus parquet is scanned once, to fill it
+    assert sum(nodes(p, "Scan parquet") for p in plans) == 1
+    plan = plans[-1]                         # the result's checkpoint job
+    assert nodes(plan, "Scan ExistingRDD") == 2
     # shard bases (n_shards rows) broadcast back; the only corpus-wide
     # exchange is the hashpartitioning on shard for the window
     assert "BroadcastExchange" in plan

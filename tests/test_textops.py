@@ -244,19 +244,18 @@ def test_banded_lsh_keys_bit_identical_udf_vs_sql(spark):
     assert got.key.max() > 255 // 2 and got.key.nunique() > 50
 
 
-def test_banded_lsh_candidate_join_shape(spark):
+def test_banded_lsh_candidate_join_shape(spark, executed_plans):
     """Scale-shape assertions (VERDICT r3 What's-wrong #1): the candidate
     self-join is an equi-join on (band, key) — no cartesian/broadcast
     nested loop — and the signature table repartitions on the composite
     key, so parallelism is no longer capped at 16 buckets."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    df = textops.embedding_near_dup_pairs(emb, threshold=0.3, dims=64,
-                                          release_cache=False)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    _, plans = executed_plans(lambda: textops.embedding_near_dup_pairs(
+        emb, threshold=0.3, dims=64).collect())
+    plan = "\n".join(plans)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "hashpartitioning(band" in plan
-    spark.catalog.clearCache()
 
 
 def test_hash_near_dup_pairs_brute_parity(spark):
