@@ -1,8 +1,10 @@
 """One materialize/release lifecycle: the fixpoint loop, `materialized`
 (a table several branches of one operator share, released on exit, also
 on error), `checkpoint` (an operator's eager result) and the
-connected-components routine.  No other module persists, caches or
-unpersists.
+connected-components routine.  No other module persists, caches,
+unpersists or checkpoints, except the lazy `localCheckpoint(eager=False)`
+pin in spatial.d8_flow_grid: it lives inside the lazy plan that
+function returns, so no block here could own its release.
 
 An iterated plan must have its lineage cut every round (an unrolled plan
 overflows Catalyst's tree by round ~15).  `iterate` cuts it with ONE

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .fixpoint import iterate, materialized
+from .fixpoint import checkpoint, iterate, materialized
 
 PR_SCALE = 2 ** 30
 
@@ -85,12 +85,12 @@ def pagerank_fixed(edges: DataFrame, iters: int = 5,
                         step, [F.sum("pr").alias("rank_mass")], iters,
                         until=lambda prev, cur: False, name="pagerank_fixed")
         with materialized(pr):
-            return (pr.join(out_deg, ["node"], "left")
-                      .join(in_deg, ["node"], "left")
-                      .select("node", "pr",
-                              F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-                              F.coalesce("in_deg", F.lit(0)).alias("in_deg"))
-                      .localCheckpoint(eager=True))
+            return checkpoint(
+                pr.join(out_deg, ["node"], "left")
+                  .join(in_deg, ["node"], "left")
+                  .select("node", "pr",
+                          F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
+                          F.coalesce("in_deg", F.lit(0)).alias("in_deg")))
 
 
 def triangle_count(edges: DataFrame, src_col: str = "src",

@@ -109,10 +109,6 @@ def index_col(name: str, **bands: str) -> Column:
     return F.expr(index_sql(name, **bands))
 
 
-def list_indices() -> list[str]:
-    return sorted(INDEX_TEMPLATES)
-
-
 def compute_np(name: str, **bands: np.ndarray) -> np.ndarray:
     """numpy twin for the pixel-block UDF path (float64, NaN on /0)."""
     b = {k: np.asarray(v, dtype=np.float64) for k, v in bands.items()}
@@ -192,10 +188,6 @@ ELSE
     ELSE 0 END
   END
 END"""
-
-
-def wofs_col(**bands: str) -> Column:
-    return F.expr(wofs_sql(**bands))
 
 
 def pan_sharpen_brovey(band: Column, total: Column, pan: Column) -> Column:

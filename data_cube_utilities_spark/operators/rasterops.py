@@ -37,7 +37,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import cells, codec
-from .fixpoint import connected_components, iterate, materialized
+from .fixpoint import (checkpoint, connected_components, iterate,
+                       materialized)
 
 # ---------------------------------------------------------------------------
 # decode bridge: image rows -> long pixel rows (raster -> relational)
@@ -929,8 +930,7 @@ def vectorize_regions_global(planes: DataFrame, threshold: float = 0.5,
     # one decode pass; the tagged table is O(regions + seam runs) — tiny
     # next to the pixel data — so materializing it is cheap and both
     # consumers below read the checkpoint instead of re-decoding tiles
-    tagged = planes.mapInPandas(stage1, schema=tag_schema) \
-                   .localCheckpoint(eager=True)
+    tagged = checkpoint(planes.mapInPandas(stage1, schema=tag_schema))
     stats = tagged.filter("kind = 's'").select(
         "tx", "ty", "region", "n_px", "min_x", "min_y",
         "max_x", "max_y", "sum_x", "sum_y")
@@ -943,17 +943,16 @@ def vectorize_regions_global(planes: DataFrame, threshold: float = 0.5,
     b = runs.select(F.col("tx").alias("btx"), F.col("ty").alias("bty"),
                     F.col("region").alias("breg"), "seam",
                     F.col("lo").alias("blo"), F.col("hi").alias("bhi"))
-    pairs_df = (a.join(b, "seam")
-                 # distinct tiles sharing the seam, counted once
-                 .filter((F.col("atx") < F.col("btx"))
-                         | ((F.col("atx") == F.col("btx"))
-                            & (F.col("aty") < F.col("bty"))))
-                 .filter((F.col("alo") <= F.col("bhi"))
-                         & (F.col("blo") <= F.col("ahi")))
-                 .select("atx", "aty", "areg", "btx", "bty", "breg")
-                 .distinct()
-                 # tiny (seam-crossing regions only) and read 1-2x below
-                 .localCheckpoint(eager=True))
+    # tiny (seam-crossing regions only) and read 1-2x below
+    pairs_df = checkpoint(a.join(b, "seam")
+                           # distinct tiles sharing the seam, counted once
+                           .filter((F.col("atx") < F.col("btx"))
+                                   | ((F.col("atx") == F.col("btx"))
+                                      & (F.col("aty") < F.col("bty"))))
+                           .filter((F.col("alo") <= F.col("bhi"))
+                                   & (F.col("blo") <= F.col("ahi")))
+                           .select("atx", "aty", "areg", "btx", "bty", "breg")
+                           .distinct())
 
     if seam_merge == "auto":
         strategy = ("driver"
@@ -1539,18 +1538,17 @@ def region_geometry_long(cells: DataFrame, x_col: str = "x",
                          .select("x", "y",
                                  F.coalesce("lab", "id").alias("lab"),
                                  F.coalesce("deg", F.lit(0)).alias("deg")))
-            return (cell_lab.groupBy("lab")
-                    .agg(F.count("*").cast("long").alias("n_px"),
-                         F.min("x").cast("long").alias("min_x"),
-                         F.min("y").cast("long").alias("min_y"),
-                         F.max("x").cast("long").alias("max_x"),
-                         F.max("y").cast("long").alias("max_y"),
-                         F.sum("x").cast("long").alias("sum_x"),
-                         F.sum("y").cast("long").alias("sum_y"),
-                         (F.lit(4) * F.count("*") - F.sum("deg"))
-                         .cast("long").alias("perimeter"))
-                    .drop("lab")
-                    .localCheckpoint())
+            return checkpoint(cell_lab.groupBy("lab")
+                              .agg(F.count("*").cast("long").alias("n_px"),
+                                   F.min("x").cast("long").alias("min_x"),
+                                   F.min("y").cast("long").alias("min_y"),
+                                   F.max("x").cast("long").alias("max_x"),
+                                   F.max("y").cast("long").alias("max_y"),
+                                   F.sum("x").cast("long").alias("sum_x"),
+                                   F.sum("y").cast("long").alias("sum_y"),
+                                   (F.lit(4) * F.count("*") - F.sum("deg"))
+                                   .cast("long").alias("perimeter"))
+                              .drop("lab"))
 
 
 def _morph_offsets(spark, radius: int, shape: str):
@@ -1843,7 +1841,7 @@ def template_match_ncc(pixels: DataFrame, template: "np.ndarray",
                           F.when(den > 0,
                                  F.round(num / F.sqrt(den.cast("double")), 6))
                            .alias("ncc")))
-        return out.localCheckpoint()
+        return checkpoint(out)
 
 
 def ssim_long(pairs: DataFrame, radius: int = 2,
@@ -1904,7 +1902,7 @@ def ssim_long(pairs: DataFrame, radius: int = 2,
                         den.cast("long").alias("den"),
                         F.round(num.cast("double") / den.cast("double"), 6)
                          .alias("ssim")))
-        return out.localCheckpoint()
+        return checkpoint(out)
 
 
 def histogram_match_long(src: DataFrame, ref: DataFrame,
@@ -2569,14 +2567,13 @@ def canny_edges_long(pixels: DataFrame, t_lo2: int = 5_000,
     nms = (probe.join(nbr, ["img", "jx", "jy"], "left")
                 .groupBy("img", "x", "y")
                 .agg(F.max(F.coalesce("nmag2", F.lit(-1))).alias("nmax")))
-    surv = (g.join(nms, ["img", "x", "y"])
-             .filter((F.col("mag2") >= t_lo2)
-                     & (F.col("mag2") >= F.col("nmax")))
-             .withColumn("strength",
-                         F.when(F.col("mag2") >= t_hi2, 2).otherwise(1)
-                          .cast("int"))
-             .drop("nmax")
-             .localCheckpoint(eager=True))
+    surv = checkpoint(g.join(nms, ["img", "x", "y"])
+                       .filter((F.col("mag2") >= t_lo2)
+                               & (F.col("mag2") >= F.col("nmax")))
+                       .withColumn("strength",
+                                   F.when(F.col("mag2") >= t_hi2, 2)
+                                    .otherwise(1).cast("int"))
+                       .drop("nmax"))
 
     node = (F.col("img") * F.lit(1 << 40) + F.col("x") * F.lit(1 << 20)
             + F.col("y"))

@@ -709,12 +709,11 @@ def flow_accumulation_grid(cells_df: DataFrame, ix_col: str = "ix",
                                    value_col)) as flow:
         with materialized(_d8_pair_closure(flow, max_iters)) as pairs:
             acc = pairs.groupBy("tx", "ty").agg(F.count("*").alias("n_upstream"))
-            return (flow.join(acc, (flow.ix == acc.tx)
-                              & (flow.iy == acc.ty), "left")
-                        .select(flow.ix, flow.iy, flow.v,
-                                F.coalesce("n_upstream", F.lit(0))
-                                 .cast("long").alias("n_upstream"))
-                        .localCheckpoint())
+            return checkpoint(flow.join(acc, (flow.ix == acc.tx)
+                                        & (flow.iy == acc.ty), "left")
+                                  .select(flow.ix, flow.iy, flow.v,
+                                          F.coalesce("n_upstream", F.lit(0))
+                                           .cast("long").alias("n_upstream")))
 
 
 def local_morans_grid(cells_df: DataFrame, ix_col: str = "ix",
@@ -1329,15 +1328,14 @@ def stream_order_shreve_grid(cells_df: DataFrame, ix_col: str = "ix",
                                     .withColumnRenamed("iy", "sy"),
                              ["sx", "sy"])
                        .groupBy("tx", "ty").agg(F.count("*").alias("n_src")))
-            return (flow.join(up, (flow.ix == up.tx) & (flow.iy == up.ty),
-                              "left")
-                        .join(sources.withColumn("is_src", F.lit(1)),
-                              ["ix", "iy"], "left")
-                        .select(flow.ix, flow.iy, flow.v,
-                                (F.coalesce("n_src", F.lit(0))
-                                 + F.coalesce("is_src", F.lit(0)))
-                                .cast("long").alias("shreve"))
-                        .localCheckpoint())
+            return checkpoint(flow.join(up, (flow.ix == up.tx)
+                                        & (flow.iy == up.ty), "left")
+                                  .join(sources.withColumn("is_src", F.lit(1)),
+                                        ["ix", "iy"], "left")
+                                  .select(flow.ix, flow.iy, flow.v,
+                                          (F.coalesce("n_src", F.lit(0))
+                                           + F.coalesce("is_src", F.lit(0)))
+                                          .cast("long").alias("shreve")))
 
 
 def distance_transform_grid(cells_df: DataFrame, ix_col: str = "ix",
@@ -1632,7 +1630,7 @@ def viewshed_grid(cells_df: DataFrame, observer: "tuple[int, int]",
                          .alias("n_block"))
                 .withColumn("visible", F.col("n_block") == 0)
                 .drop("kk"))
-        return out.localCheckpoint()
+        return checkpoint(out)
 
 
 def polygon_metrics(vertices: DataFrame, poly_col: str = "poly_id",
@@ -1819,13 +1817,13 @@ def dbscan_points(points: DataFrame, eps: int, min_pts: int,
                            .join(lbl.withColumnRenamed("pid", "qid")
                                     .withColumnRenamed("lbl", "qlbl"), "qid")
                            .groupBy("pid").agg(F.min("qlbl").alias("blbl")))
-            return (p.join(lbl, "pid", "left")
-                     .join(border, "pid", "left")
-                     .select("pid", "x", "y",
-                             F.col("lbl").isNotNull().alias("is_core"),
-                             F.coalesce("lbl", "blbl", F.lit(-1))
-                              .cast("long").alias("cluster"))
-                     .localCheckpoint())
+            return checkpoint(p.join(lbl, "pid", "left")
+                               .join(border, "pid", "left")
+                               .select("pid", "x", "y",
+                                       F.col("lbl").isNotNull()
+                                        .alias("is_core"),
+                                       F.coalesce("lbl", "blbl", F.lit(-1))
+                                        .cast("long").alias("cluster")))
 
 
 # ---------------------------------------------------------------------------
@@ -2204,10 +2202,10 @@ def rdp_simplify(traj_df: DataFrame, eps2_num: int, eps2_den: int = 1,
         ends, split, [F.sum(F.col("keep").cast("long")).alias("kept")],
         max_iters, name="rdp_simplify")
     with materialized(pts):
-        return (pts.filter("keep")
-                   .select(F.col("tid").alias(traj_id_col), "seq", "x", "y",
-                           F.lit(converged).alias("converged"))
-                   .localCheckpoint(eager=True))
+        return checkpoint(pts.filter("keep")
+                             .select(F.col("tid").alias(traj_id_col),
+                                     "seq", "x", "y",
+                                     F.lit(converged).alias("converged")))
 
 
 # ---------------------------------------------------------------------------

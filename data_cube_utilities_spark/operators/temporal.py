@@ -18,10 +18,13 @@ Reference parity (SURVEY.md 2.5 / 2.3 / 2.4):
 from __future__ import annotations
 
 from collections.abc import Sequence
+from contextlib import ExitStack
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .fixpoint import materialized
 
 
 def _w(keys: Sequence[str], time_col: str, *tiebreak: str) -> Window:
@@ -66,14 +69,6 @@ def ffill(df: DataFrame, keys: Sequence[str], value_col: str,
     w = _w(keys, time_col, *tiebreak).rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn(out_col or f"{value_col}_filled",
                          F.last(value_col, ignorenulls=True).over(w))
-
-
-def bfill(df: DataFrame, keys: Sequence[str], value_col: str,
-          time_col: str, out_col: str | None = None,
-          tiebreak: Sequence[str] = ()) -> DataFrame:
-    w = _w(keys, time_col, *tiebreak).rowsBetween(0, Window.unboundedFollowing)
-    return df.withColumn(out_col or f"{value_col}_bfilled",
-                         F.first(value_col, ignorenulls=True).over(w))
 
 
 def interp_linear(df: DataFrame, keys: Sequence[str], value_col: str,
@@ -877,20 +872,21 @@ def funnel_steps(df: DataFrame, steps: Sequence[str],
     ev = df.select(F.col(user_col).alias("u"),
                    F.col(t_col).cast("long").alias("t"),
                    F.col(step_col).alias("s"))
-    reached = []
+    counts = []
     prev = None
-    for s in steps:
-        cur = ev.filter(F.col("s") == s)
-        if prev is not None:
-            cur = (cur.join(prev.select("u", F.col("ts").alias("_pt")), "u")
-                      .filter(F.col("t") > F.col("_pt")))
-        # one row per surviving user — tiny; checkpoint so step k+1 and
-        # the count action don't re-run the whole upstream chain
-        prev = (cur.groupBy("u").agg(F.min("t").alias("ts"))
-                   .localCheckpoint(eager=True))
-        reached.append(prev)
+    with ExitStack() as stack:
+        for s in steps:
+            cur = ev.filter(F.col("s") == s)
+            if prev is not None:
+                cur = (cur.join(prev.select("u", F.col("ts").alias("_pt")),
+                                "u")
+                          .filter(F.col("t") > F.col("_pt")))
+            # one row per surviving user — tiny; materialize so step k+1
+            # and the count action don't re-run the whole upstream chain
+            prev = stack.enter_context(materialized(
+                cur.groupBy("u").agg(F.min("t").alias("ts"))))
+            counts.append(prev.count())
     spark = df.sparkSession
-    counts = [r.count() for r in reached]
     n1 = counts[0] if counts else 0
     rows = []
     for i, (s, n) in enumerate(zip(steps, counts)):

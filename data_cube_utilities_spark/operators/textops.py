@@ -716,8 +716,8 @@ def _band_keys_udf(dims: int, bands: int = N_BANDS_LSH,
     Sizing rule at scale: collision odds on uncorrelated vectors are
     ~2^-planes per band, so keep planes >= log2(n_rows / target bucket
     rows); bands then buy recall (OR-of-ANDs). The 8x8 default is sized
-    for the ~10^3-row test tables; tools/bench_lsh_scale.py evidences
-    8x16 (ANN) and 8x24 (near-dup) at 2x10^5 rows."""
+    for the ~10^3-row test tables; BENCH/LSH_SCALE.md evidences 8x16
+    (ANN) and 8x24 (near-dup) at 2x10^5 rows."""
     from pyspark.sql.functions import pandas_udf
 
     M = _plane_matrix(dims, bands * planes)
@@ -880,8 +880,9 @@ def ivf_ann_topk_batch(emb: DataFrame, query_ids: "Sequence[int]",
                                 for i in range(dims)])
     feat_cols = [f"_d{i}" for i in range(dims)]
     centers = kmeans_fit(flat, feat_cols, k=n_lists, seed=seed)
-    listed = e.withColumn("list_id", kmeans_assign_udf(centers)("v")) \
-        .select("vec_id", "list_id").localCheckpoint(eager=True)
+    assign = kmeans_assign_udf(centers)
+    listed = checkpoint(e.withColumn("list_id", assign("v"))
+                         .select("vec_id", "list_id"))
     e = e.join(listed, "vec_id")
 
     ids = [int(i) for i in query_ids]
@@ -935,8 +936,9 @@ def ivf_ann_topk(emb: DataFrame, query_id: int, dims: int, k: int = 5,
     # once). It also keeps the k x d assignment expression out of every
     # downstream plan: left inline, Catalyst re-optimizes the pushed-down
     # giant predicate per action (~90s of pure planning at 64 dims).
-    listed = e.withColumn("list_id", kmeans_assign_udf(centers)("v")) \
-        .select("vec_id", "list_id").localCheckpoint(eager=True)
+    assign = kmeans_assign_udf(centers)
+    listed = checkpoint(e.withColumn("list_id", assign("v"))
+                         .select("vec_id", "list_id"))
     e = e.join(listed, "vec_id")
 
     # query's n_probe nearest lists (driver-side: centers are tiny)
@@ -1298,8 +1300,9 @@ def ivf_pq_topk(emb: DataFrame, query_id: int, dims: int, k: int = 10,
                                 for i in range(dims)])
     centers = kmeans_fit(flat, [f"_d{i}" for i in range(dims)],
                          k=n_lists, seed=seed)
-    listed = e.withColumn("list_id", kmeans_assign_udf(centers)("v")) \
-        .select("vec_id", "list_id").localCheckpoint(eager=True)
+    assign = kmeans_assign_udf(centers)
+    listed = checkpoint(e.withColumn("list_id", assign("v"))
+                         .select("vec_id", "list_id"))
 
     if codebook is None:
         codebook = pq_codebook_first_rows(emb, dims, m=m, ksub=ksub,

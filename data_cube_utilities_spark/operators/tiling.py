@@ -14,7 +14,7 @@ Scale rationale (the north rule's partitioning/shuffle/skew clause):
   and documented-approximate for holistic ones (median/geomedian).
 
 Reference parity:
-  create_geographic_chunks   dc_chunker.py:8-85
+  create_geographic_chunks   dc_chunker.py:8-42 (geographic_chunks_degrees)
   combine_geographic_chunks  dc_chunker.py:87-125 (dedup invariant)
 """
 
@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import cells
+from .fixpoint import iterate, materialized
 
 
 def assign_cells(df: DataFrame, lat_col: str, lon_col: str, res: int,
@@ -36,22 +37,13 @@ def assign_cells(df: DataFrame, lat_col: str, lon_col: str, res: int,
                          cells.encode_col(F.col(lat_col), F.col(lon_col), res))
 
 
-def geographic_chunks(lat_range: tuple[float, float],
-                      lon_range: tuple[float, float],
-                      res: int) -> np.ndarray:
-    """The chunk list for a bbox = geocell cover (replaces the reference's
-    degree-sized chunk tuples; dc_chunker.py:8-85)."""
-    return cells.polyfill_bbox(lat_range[0], lat_range[1],
-                               lon_range[0], lon_range[1], res)
-
-
 def geographic_chunks_degrees(longitude: tuple[float, float],
                               latitude: tuple[float, float],
                               geographic_chunk_size: float = 0.5) -> list[dict]:
     """Degree-based latitude-strip chunking with the reference's exact
     semantics (dc_chunker.py:8-42): n = max(1, ceil(area / size)) equal lat
     strips, full longitude range each. Provided for parity/migration; the
-    engine's native chunking is the geocell cover above."""
+    engine's native chunking is the geocell cover (cells.polyfill_bbox)."""
     if not (len(latitude) == 2 and latitude[1] >= latitude[0]):
         raise ValueError("latitude must be (lo, hi) with hi >= lo")
     if not (len(longitude) == 2 and longitude[1] >= longitude[0]):
@@ -89,15 +81,18 @@ def compact_cover(df: DataFrame, cell_col: str = "cell_id") -> np.ndarray:
     """Distinct cells of a DataFrame compacted to a minimal mixed-res cover
     (H3 compact analogue) — used for partition pruning manifests.
 
-    The sibling-promotion loop runs DISTRIBUTED: per resolution level
-    (deepest first), group the level's cells by parent and promote
-    parents with a complete count of 4 children — the DataFrame lift of
-    cells.compact's numpy loop, identical output. Cells proven
-    un-promotable are collected as they freeze, so the ONLY driver-side
-    volume is the compacted cover itself: a fine-res cover of a large AOI
-    may be millions of uniform cells, but the compacted manifest is
-    bounded by the AOI's boundary complexity (VERDICT r4 What's-wrong
-    #3 — the old form collected every distinct cell first)."""
+    The sibling promotion runs DISTRIBUTED as one `fixpoint.iterate`
+    over the distinct cells: one max(res) job finds the top level, then
+    round k promotes level top-k+1 — group the level's cells by parent,
+    promote complete sibling sets of 4, pass the level's un-promoted
+    cells through (no later round touches them), and `distinct` only
+    the level below, where promoted parents can meet existing cells.
+    The DataFrame lift of cells.compact's numpy loop, identical output.
+    The ONLY driver-side volume is the compacted cover itself, collected
+    once from the final state: a fine-res cover of a large AOI may be
+    millions of uniform cells, but the compacted manifest is bounded by
+    the AOI's boundary complexity (VERDICT r4 What's-wrong #3 — the old
+    form collected every distinct cell first)."""
     res_c = F.shiftright(F.col("c"), cells.RES_SHIFT)
     iy_c = F.shiftright(F.col("c"), cells.IY_SHIFT) \
         .bitwiseAND(F.lit((1 << 29) - 1))
@@ -106,25 +101,27 @@ def compact_cover(df: DataFrame, cell_col: str = "cell_id") -> np.ndarray:
                 + F.shiftright(iy_c, 1) * F.lit(1 << cells.IY_SHIFT)
                 + F.shiftright(ix_c, 1))
 
-    cur = (df.select(F.col(cell_col).cast("long").alias("c")).distinct()
-             .localCheckpoint(eager=True))
-    frozen: list[np.ndarray] = []
-    while True:
-        max_r = cur.agg(F.max(res_c).alias("m")).first()["m"]
-        if max_r is None or max_r == 0:
-            break
-        at_max = cur.filter(res_c == max_r).withColumn("p", parent_c)
-        promoted = (at_max.groupBy("p").agg(F.count("*").alias("n"))
-                          .filter(F.col("n") == 4).select("p"))
-        froz = at_max.join(promoted, "p", "left_anti").select("c")
-        frozen.append(np.asarray([r["c"] for r in froz.collect()],
-                                 dtype=np.int64))
-        cur = (cur.filter(res_c != max_r)
-                  .union(promoted.select(F.col("p").alias("c")))
-                  .distinct().localCheckpoint(eager=True))
-    frozen.append(np.asarray([r["c"] for r in cur.collect()],
-                             dtype=np.int64))
-    return np.unique(np.concatenate(frozen))
+    ids = df.select(F.col(cell_col).cast("long").alias("c"))
+    top = ids.agg(F.max(res_c)).first()[0] or 0
+    levels = iter(range(top, 0, -1))
+
+    def step(cur: DataFrame) -> DataFrame:
+        lvl = next(levels)
+        at = cur.filter(res_c == lvl).withColumn("p", parent_c)
+        promoted = (at.groupBy("p").agg(F.count("*").alias("n"))
+                      .filter(F.col("n") == 4).select("p"))
+        kept = at.join(promoted, "p", "left_anti").select("c")
+        below = (cur.filter(res_c == lvl - 1)
+                    .union(promoted.select(F.col("p").alias("c"))).distinct())
+        return (cur.filter((res_c > lvl) | (res_c < lvl - 1))
+                   .union(kept).union(below))
+
+    final, _ = iterate(ids.distinct(), step, [F.count("*").alias("cells")],
+                       top, until=lambda prev, cur: False,
+                       name="compact_cover")
+    with materialized(final) as final:
+        return np.unique(np.asarray([r["c"] for r in final.collect()],
+                                    dtype=np.int64))
 
 
 def cell_pruning_filter(cover: np.ndarray, cell_col: str = "cell_id",

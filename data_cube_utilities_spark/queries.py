@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from . import cells
 from .operators import indices, spatial
+from .operators.fixpoint import checkpoint
 
 # ---------------------------------------------------------------------------
 # deterministic derived columns (identical integer arithmetic both sides)
@@ -1115,7 +1116,7 @@ def q_stream_join(spark, sf_dir):
     finally:
         q.stop()
     try:
-        return spark.table(name).localCheckpoint(eager=True)
+        return checkpoint(spark.table(name))
     finally:
         spark.catalog.dropTempView(name)
         shutil.rmtree(d, ignore_errors=True)
@@ -8200,9 +8201,8 @@ def q_streaming_kmv(spark, sf_dir):
             F.col("n_kept").desc(), F.col("kth").asc())
         # materialize before dropping the sink + temp dir (repeated
         # registry runs must not accumulate either)
-        return (emitted.withColumn("rn", F.row_number().over(w))
-                       .filter("rn = 1").drop("rn")
-                       .localCheckpoint(eager=True))
+        return checkpoint(emitted.withColumn("rn", F.row_number().over(w))
+                                 .filter("rn = 1").drop("rn"))
     finally:
         spark.catalog.dropTempView(name)
         import shutil

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import textops
+from .operators.fixpoint import checkpoint
 from .queries import _t
 
 N_BANDS = 8
@@ -687,9 +688,8 @@ def q_dedup_gate(spark, sf_dir):
         # materialize before dropping the memory sink + temp dir: the
         # driver collects later, and repeated registry runs must not
         # accumulate sink tables in driver memory or dirs in /tmp
-        return (emitted.withColumn("rn", F.row_number().over(w))
-                       .filter("rn = 1").drop("rn")
-                       .localCheckpoint(eager=True))
+        return checkpoint(emitted.withColumn("rn", F.row_number().over(w))
+                                 .filter("rn = 1").drop("rn"))
     finally:
         spark.catalog.dropTempView(name)
         shutil.rmtree(d, ignore_errors=True)
@@ -741,9 +741,8 @@ def q_phash_gate(spark, sf_dir):
         emitted = spark.table(name)
         w = (Window.partitionBy("band", "key", "member_id")
                    .orderBy(F.col("n_seen").desc()))
-        return (emitted.withColumn("rn", F.row_number().over(w))
-                       .filter("rn = 1").drop("rn")
-                       .localCheckpoint(eager=True))
+        return checkpoint(emitted.withColumn("rn", F.row_number().over(w))
+                                 .filter("rn = 1").drop("rn"))
     finally:
         spark.catalog.dropTempView(name)
         shutil.rmtree(d, ignore_errors=True)
@@ -871,13 +870,12 @@ def q_tar_shards(spark, sf_dir):
                                     payload_col="payload",
                                     ext="txt").collect()
         back = multimodal.read_tar_shards(spark, out)
-        return (back.filter("ext = 'txt'")
-                    .groupBy("shard")
-                    .agg(F.count("*").alias("n_members"),
-                         F.sum(F.length("data")).alias("data_bytes"),
-                         F.min("key").alias("key_min"),
-                         F.max("key").alias("key_max"))
-                    .localCheckpoint(eager=True))
+        return checkpoint(back.filter("ext = 'txt'")
+                              .groupBy("shard")
+                              .agg(F.count("*").alias("n_members"),
+                                   F.sum(F.length("data")).alias("data_bytes"),
+                                   F.min("key").alias("key_min"),
+                                   F.max("key").alias("key_max")))
     finally:
         shutil.rmtree(out, ignore_errors=True)
 

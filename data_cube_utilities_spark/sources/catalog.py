@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.fixpoint import checkpoint
+
 
 def mostcommon_crs(datasets: DataFrame, crs_col: str = "crs") -> str | None:
     """Most common CRS among matching datasets; deterministic tie-break on
@@ -123,7 +125,7 @@ def profile_table(df: DataFrame, columns: Sequence[str] | None = None,
             kinds[c] = "str"
             aggs.append(F.min(F.col(c).cast("string")).alias(f"{c}__mn"))
             aggs.append(F.max(F.col(c).cast("string")).alias(f"{c}__mx"))
-    one = df.agg(*aggs).localCheckpoint(eager=True)
+    one = checkpoint(df.agg(*aggs))
 
     parts = []
     for c in cols:

@@ -123,28 +123,6 @@ def foreach_batch_snapshot(stream: DataFrame, table_path: str,
             .start())
 
 
-def incremental_first_valid_merge(spark: SparkSession, table_path: str,
-                                  keys, bands) -> DataFrame:
-    """Read the snapshot chain and reduce it with the incremental
-    combine-first semantics (earliest-committed value wins per key) — the
-    intermediate_product accumulation expressed over snapshots."""
-    from ..operators.mosaic import incremental_combine_first
-    from ..sources.snapshots import SnapshotTable
-
-    table = SnapshotTable(table_path)
-    versions = sorted(m["version"] for m in table.history())
-    out = None
-    for v in versions:
-        m = table.manifest(v)
-        if m["operation"] != "append":
-            continue
-        df = spark.read.parquet(
-            f"{table_path}/data/{m['data_dir']}")
-        out = df if out is None else incremental_combine_first(
-            out, df, keys, bands)
-    return out
-
-
 def interval_join(left: DataFrame, right: DataFrame, key_col: str,
                   left_ts: str = "ts", right_ts: str = "ts",
                   max_lag: str = "10 minutes", max_lead: str = "0 seconds",

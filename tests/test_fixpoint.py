@@ -6,6 +6,7 @@ D8 closures)."""
 
 import collections
 import heapq
+import inspect
 import pathlib
 import re
 
@@ -106,14 +107,55 @@ def test_materialized_releases_its_checkpoint(spark, cached_ids):
 
 def test_only_fixpoint_persists_or_unpersists():
     """One materialize/release lifecycle: no package module other than
-    operators/fixpoint.py calls .persist(, .unpersist( or .cache()."""
+    operators/fixpoint.py calls .persist(, .unpersist(, .cache() or
+    .localCheckpoint( — except the one lazy pin d8_flow_grid keeps
+    inside the plan it returns."""
     own = pathlib.Path(fixpoint.__file__)
     pkg = own.parents[1]
+    lazy_pin = ".localCheckpoint(eager=False)"
+    d8 = inspect.getsource(spatial.d8_flow_grid)
+    assert d8.count(lazy_pin) == 1
+
+    def text(p):
+        s = p.read_text()
+        if p == pathlib.Path(spatial.__file__):
+            s = s.replace(d8, d8.replace(lazy_pin, ""))
+        return s
+
     offenders = [f"{p.relative_to(pkg)}:{i}"
                  for p in sorted(pkg.rglob("*.py")) if p != own
-                 for i, line in enumerate(p.read_text().splitlines(), 1)
-                 if re.search(r"\.(persist|unpersist)\(|\.cache\(\)", line)]
+                 for i, line in enumerate(text(p).splitlines(), 1)
+                 if re.search(r"\.(persist|unpersist|localCheckpoint)\(|"
+                              r"\.cache\(\)", line)]
     assert not offenders, offenders
+
+
+def test_compact_cover_and_funnel_release_their_checkpoints(spark,
+                                                            cached_ids):
+    """Both operators return driver-built results: every checkpoint they
+    take is released before they return."""
+    from data_cube_utilities_spark import cells
+    from data_cube_utilities_spark.operators import temporal, tiling
+
+    rng = np.random.RandomState(11)
+    mixed = np.concatenate([
+        cells.children(int(cells.encode(10.0, 10.0, 2)), 4),
+        cells.encode(rng.uniform(-60, 60, 40), rng.uniform(-170, 170, 40), 6),
+        cells.encode(rng.uniform(-60, 60, 10), rng.uniform(-170, 170, 10), 3),
+    ])
+    df = spark.createDataFrame([(int(c),) for c in mixed], "cell_id long")
+    before = cached_ids()
+    assert np.array_equal(tiling.compact_cover(df), cells.compact(mixed))
+    assert cached_ids() == before
+
+    ev = spark.createDataFrame(
+        [(1, 10, "view"), (1, 20, "click"), (1, 30, "purchase"),
+         (2, 10, "click"), (2, 20, "view"), (3, 5, "view"),
+         (4, 1, "view"), (4, 2, "click"), (4, 2, "purchase")],
+        "user long, t long, step string")
+    out = temporal.funnel_steps(ev, ["view", "click", "purchase"])
+    assert [r.n_users for r in out.orderBy("step_idx").collect()] == [4, 2, 1]
+    assert cached_ids() == before
 
 
 # ---------------------------------------------------------------------------

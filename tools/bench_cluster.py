@@ -43,13 +43,6 @@ os.environ["SPARK_GRAFT_BENCH_TILEPX"] = str({tile_px})
 from pyspark.sql import SparkSession
 import bench
 
-def busy_cpu_s():
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    vals = [int(x) for x in parts[1:9]]
-    busy = vals[0] + vals[1] + vals[2] + vals[5] + vals[6] + vals[7]
-    return busy / os.sysconf("SC_CLK_TCK")
-
 spark = (SparkSession.builder.master({master!r})
     .appName("geocube-cluster-scaling")
     .config("spark.executor.cores", "{exec_cores}")
@@ -71,10 +64,10 @@ bench._noop(out)     # warm-up
 time.sleep({cooldown})
 walls, cpus = [], []
 for _ in range({inner}):
-    c0 = busy_cpu_s(); t0 = time.time()
+    c0 = bench._busy_cpu_s(); t0 = time.time()
     bench._noop(out)
     walls.append(time.time() - t0)
-    cpus.append(busy_cpu_s() - c0)
+    cpus.append(bench._busy_cpu_s() - c0)
     time.sleep(5)
 i = walls.index(min(walls))
 n_out = out.count()

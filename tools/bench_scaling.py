@@ -48,14 +48,6 @@ os.environ["SPARK_GRAFT_BENCH_TILEPX"] = str({tile_px})
 from data_cube_utilities_spark.session import get_spark
 import bench
 
-def busy_cpu_s():
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    vals = [int(x) for x in parts[1:9]]
-    # user + nice + system + irq + softirq + steal
-    busy = vals[0] + vals[1] + vals[2] + vals[5] + vals[6] + vals[7]
-    return busy / os.sysconf("SC_CLK_TCK")
-
 spark = get_spark("scaling", cores={cores}, shuffle_partitions=max({cores}, 16),
                   extra_conf={{
                       # one split per generated file: exact task waves at
@@ -67,10 +59,10 @@ bench._noop(out)           # warm-up: JIT, python worker pool, page cache
 time.sleep({cooldown})
 walls, cpus = [], []
 for _ in range({inner}):
-    c0 = busy_cpu_s(); t0 = time.time()
+    c0 = bench._busy_cpu_s(); t0 = time.time()
     bench._noop(out)
     walls.append(time.time() - t0)
-    cpus.append(busy_cpu_s() - c0)
+    cpus.append(bench._busy_cpu_s() - c0)
     time.sleep(5)
 i = walls.index(min(walls))
 n_out = out.count()
