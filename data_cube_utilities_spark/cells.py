@@ -38,6 +38,8 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .operators import stencil
+
 RES_SHIFT = 58
 IY_SHIFT = 29
 MAX_RES = 28
@@ -735,13 +737,10 @@ def hex_cell_stats(df, x_col: str, y_col: str, size: float):
     qc, rc = hex_encode_cols(F.col(x_col), F.col(y_col), size)
     cells_df = (df.select(qc.alias("q"), rc.alias("r"))
                   .groupBy("q", "r").agg(F.count("*").alias("n_points")))
-    offs = df.sparkSession.createDataFrame(
-        list(HEX_RING1), "dq long, dr long")
     nbr = cells_df.select(F.col("q").alias("nq"), F.col("r").alias("nr"))
-    adj = (cells_df.crossJoin(F.broadcast(offs))
-                   .withColumn("nq", F.col("q") + F.col("dq"))
-                   .withColumn("nr", F.col("r") + F.col("dr"))
-                   .join(nbr, ["nq", "nr"])
+    adj = (stencil.neighbors(cells_df, HEX_RING1, nbr, keys=("q", "r"),
+                             to=("nq", "nr"), schema="dq long, dr long",
+                             deltas=("dq", "dr"))
                    .groupBy("q", "r")
                    .agg(F.count("*").alias("n_occupied_neighbors")))
     return (cells_df.join(adj, ["q", "r"], "left")

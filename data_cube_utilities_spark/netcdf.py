@@ -15,9 +15,8 @@ subset the engine emits:
 
 Like geotiff.py, the reader parses exactly what the writer emits (loud
 failures otherwise) — it exists for round-trip verification, not as a
-general NetCDF library. DataFrame ops: ``with_netcdf`` adds an `nc` binary
-column per tile; ``save_netcdfs`` materializes one .nc per tile from the
-executors (distributed sink, no driver collect).
+general NetCDF library. DataFrame op: ``save_netcdfs`` materializes one
+.nc per tile from the executors (distributed sink, no driver collect).
 """
 
 from __future__ import annotations
@@ -249,24 +248,6 @@ def tile_netcdf_bytes(block: np.ndarray, lon0: float, lat0: float,
         global_attrs={"Conventions": "CF-1.6", "crs": "EPSG:4326"},
         var_attrs={"latitude": {"units": "degrees_north"},
                    "longitude": {"units": "degrees_east"}})
-
-
-def with_netcdf(images: DataFrame) -> DataFrame:
-    """Add an `nc` binary column: each tile re-encoded as classic NetCDF
-    with its affine footprint (lat0/lon0/dx/dy columns from the
-    synthesizer)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for r in b.itertuples():
-                blk = codec.decode_block(r.bytes, r.w, r.h, r.fmt)
-                rows.append((r.image_id,
-                             tile_netcdf_bytes(blk, r.lon0, r.lat0,
-                                               r.dx, r.dy)))
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "nc"])
-
-    return images.mapInPandas(run, "image_id string, nc binary")
 
 
 def save_netcdfs(images: DataFrame, out_dir: str) -> int:

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import cells, codec
+from . import stencil
 from .fixpoint import (checkpoint, connected_components, iterate,
                        materialized)
 
@@ -1519,14 +1520,11 @@ def region_geometry_long(cells: DataFrame, x_col: str = "x",
                       F.col(y_col).cast("long").alias("y"))
               .distinct()
               .withColumn("id", F.col("x") * y_span + F.col("y")))
-    offs = cells.sparkSession.createDataFrame(
-        [(1, 0), (-1, 0), (0, 1), (0, -1)], "dx long, dy long")
     with materialized(g) as g:
         nbr = g.select(F.col("x").alias("nx"), F.col("y").alias("ny"),
                        F.col("id").alias("nid"))
-        adj = (g.crossJoin(F.broadcast(offs))
-                .join(nbr, (F.col("x") + F.col("dx") == F.col("nx"))
-                      & (F.col("y") + F.col("dy") == F.col("ny")))
+        adj = (stencil.neighbors(g, stencil.ROOK, nbr, keys=("x", "y"),
+                                 to=("nx", "ny"))
                 .select(F.col("id").alias("u"), F.col("nid").alias("v")))
         with materialized(adj) as adj:
             deg = (adj.groupBy("u").agg(F.count("*").alias("deg"))
@@ -1551,19 +1549,12 @@ def region_geometry_long(cells: DataFrame, x_col: str = "x",
                               .drop("lab"))
 
 
-def _morph_offsets(spark, radius: int, shape: str):
+def _morph_offsets(radius: int, shape: str) -> list:
     """Structuring-element offsets: 'square' = Chebyshev ball (the
     (2r+1)^2 box), 'cross' = Manhattan ball (von Neumann diamond)."""
-    if shape == "square":
-        offs = [(dx, dy) for dx in range(-radius, radius + 1)
-                for dy in range(-radius, radius + 1)]
-    elif shape == "cross":
-        offs = [(dx, dy) for dx in range(-radius, radius + 1)
-                for dy in range(-radius, radius + 1)
-                if abs(dx) + abs(dy) <= radius]
-    else:
+    if shape not in ("square", "cross"):
         raise ValueError(f"unknown structuring element {shape!r}")
-    return spark.createDataFrame(offs, "dx long, dy long"), len(offs)
+    return getattr(stencil, shape)(radius)
 
 
 def dilate_cells(cells_df: DataFrame, radius: int = 1,
@@ -1577,13 +1568,10 @@ def dilate_cells(cells_df: DataFrame, radius: int = 1,
 
     Shape at scale: one broadcast explode (|SE| small constant) + one
     distinct — a single shuffle on the output cells, no join."""
-    offs, _ = _morph_offsets(cells_df.sparkSession, radius, shape)
-    return (cells_df.select(F.col(x_col).cast("long").alias("x"),
-                            F.col(y_col).cast("long").alias("y"))
-            .crossJoin(F.broadcast(offs))
-            .select((F.col("x") + F.col("dx")).alias("x"),
-                    (F.col("y") + F.col("dy")).alias("y"))
-            .distinct())
+    g = cells_df.select(F.col(x_col).cast("long").alias("x"),
+                        F.col(y_col).cast("long").alias("y"))
+    return stencil.shifted(g, _morph_offsets(radius, shape), keys=("x", "y"),
+                           to=("x", "y"), keep=()).distinct()
 
 
 def erode_cells(cells_df: DataFrame, radius: int = 1,
@@ -1600,14 +1588,12 @@ def erode_cells(cells_df: DataFrame, radius: int = 1,
     g = (cells_df.select(F.col(x_col).cast("long").alias("x"),
                          F.col(y_col).cast("long").alias("y"))
          .distinct())
-    offs, n_se = _morph_offsets(cells_df.sparkSession, radius, shape)
-    probe = (g.crossJoin(F.broadcast(offs))
-              .select("x", "y", (F.col("x") + F.col("dx")).alias("nx"),
-                      (F.col("y") + F.col("dy")).alias("ny")))
+    offs = _morph_offsets(radius, shape)
     nbr = g.select(F.col("x").alias("nx"), F.col("y").alias("ny"))
-    return (probe.join(nbr, ["nx", "ny"])
+    return (stencil.neighbors(g, offs, nbr, keys=("x", "y"), to=("nx", "ny"),
+                              keep=("x", "y"))
                  .groupBy("x", "y").agg(F.count("*").alias("_n"))
-                 .filter(F.col("_n") == n_se)
+                 .filter(F.col("_n") == len(offs))
                  .select("x", "y"))
 
 
@@ -1965,20 +1951,21 @@ def _fold_offsets(src: DataFrame, aggs: list, window: list,
     SOURCE side, shuffle once on the destination (img, x, y), aggregate;
     HAVING count = window size keeps only full-neighborhood centers.
     Aggs must include F.count("*").alias("_c")."""
-    shifted = src.select(
-        "img",
-        F.explode(F.array(*[
-            F.struct((F.col("x") - dx).alias("cx"),
-                     (F.col("y") - dy).alias("cy"),
-                     F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in window])).alias("o"),
-        *[F.col(c) for c in src.columns if c not in ("img", "x", "y")])
-    flat = shifted.select(
-        "img", F.col("o.cx").alias("x"), F.col("o.cy").alias("y"),
-        F.col("o.dx").alias("dx"), F.col("o.dy").alias("dy"),
-        *[c for c in src.columns if c not in ("img", "x", "y")])
+    flat = stencil.fan_out(
+        src, [(dx, dy, dx, dy) for dx, dy in window], fields=("dx", "dy"),
+        carry=[c for c in src.columns if c not in ("img", "x", "y")])
     return (flat.groupBy("img", "x", "y").agg(*aggs)
                 .filter(F.col("_c") == full).drop("_c"))
+
+
+def _sobel(p: DataFrame) -> DataFrame:
+    """The shared 3x3 Sobel fold: (img, x, y, gx, gy) at full windows."""
+    return _fold_offsets(p, [
+        F.sum(F.col("dx") * (2 - F.abs(F.col("dy"))) * F.col("v"))
+         .cast("long").alias("gx"),
+        F.sum(F.col("dy") * (2 - F.abs(F.col("dx"))) * F.col("v"))
+         .cast("long").alias("gy"),
+        F.count("*").alias("_c")], stencil.QUEEN_SELF, 9)
 
 
 def harris_corners_long(pixels: DataFrame, k_num: int = 1, k_den: int = 20,
@@ -2009,27 +1996,19 @@ def harris_corners_long(pixels: DataFrame, k_num: int = 1, k_den: int = 20,
                       F.col(x_col).cast("long").alias("x"),
                       F.col(y_col).cast("long").alias("y"),
                       F.col(value_col).cast("long").alias("v"))
-    fold = _fold_offsets
-    w9 = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    sobel = fold(p, [
-        F.sum(F.col("dx") * (2 - F.abs(F.col("dy"))) * F.col("v"))
-         .cast("long").alias("gx"),
-        F.sum(F.col("dy") * (2 - F.abs(F.col("dx"))) * F.col("v"))
-         .cast("long").alias("gy"),
-        F.count("*").alias("_c")], w9, 9)
-    tensor = fold(sobel, [
+    sobel = _sobel(p)
+    tensor = _fold_offsets(sobel, [
         F.sum(F.col("gx") * F.col("gx")).cast("long").alias("sxx"),
         F.sum(F.col("gy") * F.col("gy")).cast("long").alias("syy"),
         F.sum(F.col("gx") * F.col("gy")).cast("long").alias("sxy"),
-        F.count("*").alias("_c")], w9, 9)
+        F.count("*").alias("_c")], stencil.QUEEN_SELF, 9)
     det = F.col("sxx") * F.col("syy") - F.col("sxy") * F.col("sxy")
     tr = F.col("sxx") + F.col("syy")
     resp = tensor.select(
         "img", "x", "y",
         (F.lit(k_den) * det - F.lit(k_num) * tr * tr).alias("r"))
-    w8 = [(dx, dy) for dx, dy in w9 if (dx, dy) != (0, 0)]
-    nmax = fold(resp, [F.max("r").alias("nmx"),
-                       F.count("*").alias("_c")], w8, 8)
+    nmax = _fold_offsets(resp, [F.max("r").alias("nmx"),
+                                F.count("*").alias("_c")], stencil.QUEEN, 8)
     return (resp.join(nmax, ["img", "x", "y"])
                 .select("img", "x", "y", F.col("r").alias("r20"),
                         ((F.col("r") > threshold)
@@ -2074,13 +2053,7 @@ def hough_lines_long(pixels: DataFrame, mag_thresh: int = 400,
                       F.col(x_col).cast("long").alias("x"),
                       F.col(y_col).cast("long").alias("y"),
                       F.col(value_col).cast("long").alias("v"))
-    w9 = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    grad = _fold_offsets(p, [
-        F.sum(F.col("dx") * (2 - F.abs(F.col("dy"))) * F.col("v"))
-         .cast("long").alias("gx"),
-        F.sum(F.col("dy") * (2 - F.abs(F.col("dx"))) * F.col("v"))
-         .cast("long").alias("gy"),
-        F.count("*").alias("_c")], w9, 9)
+    grad = _sobel(p)
     edges = grad.filter(F.abs(F.col("gx")) + F.abs(F.col("gy"))
                         > mag_thresh)
     trig = hough_trig_table(n_theta, scale)
@@ -2139,17 +2112,8 @@ def lbp_histogram_long(pixels: DataFrame, img_col: str = "img",
                       F.col(x_col).cast("long").alias("x"),
                       F.col(y_col).cast("long").alias("y"),
                       F.col(value_col).cast("long").alias("v"))
-    shifted = p.select(
-        "img",
-        F.explode(F.array(*[
-            F.struct((F.col("x") - dx).alias("cx"),
-                     (F.col("y") - dy).alias("cy"),
-                     F.lit(w).alias("w"))
-            for dx, dy, w in LBP_OFFSETS])).alias("o"),
-        F.col("v").alias("nv"))
-    flat = shifted.select("img", F.col("o.cx").alias("x"),
-                          F.col("o.cy").alias("y"),
-                          F.col("o.w").alias("w"), "nv")
+    flat = stencil.fan_out(p, LBP_OFFSETS, fields=("w",),
+                           carry=[F.col("v").alias("nv")])
     codes = (flat.join(p, ["img", "x", "y"])
                  .groupBy("img", "x", "y", "v")
                  .agg(F.sum(F.when(F.col("nv") >= F.col("v"),
@@ -2241,8 +2205,7 @@ def _sep_fold(src: DataFrame, in_col: str, out_col: str,
     """One axis of a separable integer convolution via _fold_offsets:
     weights indexed by the offset along `axis` ('x' or 'y')."""
     r = len(weights) // 2
-    window = [(d, 0) if axis == "x" else (0, d)
-              for d in range(-r, r + 1)]
+    window = [(d, 0) if axis == "x" else (0, d) for (d,) in stencil.span(r)]
     warr = F.array(*[F.lit(int(w)) for w in weights])
     idx = (F.col("dx") if axis == "x" else F.col("dy")) + (r + 1)
     agg = [F.sum(F.element_at(warr, idx.cast("int")) * F.col(in_col))
@@ -2285,11 +2248,9 @@ def dog_blobs_long(pixels: DataFrame, threshold: int = 0,
     dog = (l2.join(l1, ["img", "x", "y"])
              .select("img", "x", "y",
                      (F.col("l2") - 256 * F.col("l1")).alias("dog")))
-    w8 = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-          if (dx, dy) != (0, 0)]
     ext = _fold_offsets(dog, [F.max("dog").alias("nmx"),
                               F.min("dog").alias("nmn"),
-                              F.count("*").alias("_c")], w8, 8)
+                              F.count("*").alias("_c")], stencil.QUEEN, 8)
     return (dog.join(ext, ["img", "x", "y"])
                .select("img", "x", "y", "dog",
                        ((F.col("dog") > F.col("nmx"))
@@ -2345,13 +2306,7 @@ def hog_features_long(pixels: DataFrame, cell: int = 8,
                       F.col(x_col).cast("long").alias("x"),
                       F.col(y_col).cast("long").alias("y"),
                       F.col(value_col).cast("long").alias("v"))
-    w9 = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    sobel = _fold_offsets(p, [
-        F.sum(F.col("dx") * (2 - F.abs(F.col("dy"))) * F.col("v"))
-         .cast("long").alias("gx"),
-        F.sum(F.col("dy") * (2 - F.abs(F.col("dx"))) * F.col("v"))
-         .cast("long").alias("gy"),
-        F.count("*").alias("_c")], w9, 9)
+    sobel = _sobel(p)
     gx, gy = F.col("gx"), F.col("gy")
     binned = sobel.select(
         "img", (F.col("x") / cell).cast("long").alias("cx"),
@@ -2534,13 +2489,7 @@ def canny_edges_long(pixels: DataFrame, t_lo2: int = 5_000,
                       F.col(x_col).cast("long").alias("x"),
                       F.col(y_col).cast("long").alias("y"),
                       F.col(value_col).cast("long").alias("v"))
-    w9 = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    grad = _fold_offsets(p, [
-        F.sum(F.col("dx") * (2 - F.abs(F.col("dy"))) * F.col("v"))
-         .cast("long").alias("gx"),
-        F.sum(F.col("dy") * (2 - F.abs(F.col("dx"))) * F.col("v"))
-         .cast("long").alias("gy"),
-        F.count("*").alias("_c")], w9, 9)
+    grad = _sobel(p)
     ax, ay = F.abs(F.col("gx")), F.abs(F.col("gy"))
     sector = (F.when(5 * ay <= 2 * ax, 0)
                .when(5 * ax <= 2 * ay, 2)
@@ -2578,15 +2527,8 @@ def canny_edges_long(pixels: DataFrame, t_lo2: int = 5_000,
     node = (F.col("img") * F.lit(1 << 40) + F.col("x") * F.lit(1 << 20)
             + F.col("y"))
     nodes = surv.select("img", "x", "y", "strength", node.alias("node"))
-    w8 = [(dx, dy) for dx, dy in w9 if (dx, dy) != (0, 0)]
-    adj = (nodes.select(
-               "img", "node",
-               F.explode(F.array(*[
-                   F.struct((F.col("x") + dx).alias("jx"),
-                            (F.col("y") + dy).alias("jy"))
-                   for dx, dy in w8])).alias("o"))
-               .select("img", "node", F.col("o.jx").alias("x"),
-                       F.col("o.jy").alias("y"))
+    adj = (stencil.fan_out(nodes, stencil.QUEEN, to=("jx", "jy"),
+                           by=("img", "node"), sign=1)
                .join(nodes.select("img", "x", "y",
                                   F.col("node").alias("node2")),
                      ["img", "x", "y"])
@@ -2684,17 +2626,8 @@ def census_codes_long(pixels: DataFrame, img_col: str = "img",
                       F.col(x_col).cast("long").alias("x"),
                       F.col(y_col).cast("long").alias("y"),
                       F.col(value_col).cast("long").alias("v"))
-    shifted = p.select(
-        "img",
-        F.explode(F.array(*[
-            F.struct((F.col("x") - dx).alias("cx"),
-                     (F.col("y") - dy).alias("cy"),
-                     F.lit(w).alias("w"))
-            for dx, dy, w in LBP_OFFSETS])).alias("o"),
-        F.col("v").alias("nv"))
-    flat = shifted.select("img", F.col("o.cx").alias("x"),
-                          F.col("o.cy").alias("y"),
-                          F.col("o.w").alias("w"), "nv")
+    flat = stencil.fan_out(p, LBP_OFFSETS, fields=("w",),
+                           carry=[F.col("v").alias("nv")])
     return (flat.join(p, ["img", "x", "y"])
                 .groupBy("img", "x", "y", "v")
                 .agg(F.sum(F.when(F.col("nv") < F.col("v"),
@@ -2805,17 +2738,9 @@ def fast_corners_long(pixels: DataFrame, threshold: int = 8,
                       F.col(x_col).cast("long").alias("x"),
                       F.col(y_col).cast("long").alias("y"),
                       F.col(value_col).cast("long").alias("v"))
-    shifted = p.select(
-        "img",
-        F.explode(F.array(*[
-            F.struct((F.col("x") - dx).alias("cx"),
-                     (F.col("y") - dy).alias("cy"),
-                     F.lit(1 << i).alias("w"))
-            for i, (dx, dy) in enumerate(FAST_RING)])).alias("o"),
-        F.col("v").alias("nv"))
-    flat = shifted.select("img", F.col("o.cx").alias("x"),
-                          F.col("o.cy").alias("y"),
-                          F.col("o.w").alias("w"), "nv")
+    flat = stencil.fan_out(
+        p, [(dx, dy, 1 << i) for i, (dx, dy) in enumerate(FAST_RING)],
+        fields=("w",), carry=[F.col("v").alias("nv")])
     t = int(threshold)
     masks = (flat.join(p, ["img", "x", "y"])
                  .groupBy("img", "x", "y", "v")
@@ -2921,13 +2846,9 @@ def _zs_substep(on: DataFrame, step: int) -> DataFrame:
     """One Zhang-Suen sub-iteration over the ON-pixel set: gather the
     8-neighborhood with the offs-broadcast shifted-selves join, apply
     the four deletion conditions, return survivors."""
-    offs = on.sparkSession.createDataFrame(
-        [(n, dx, dy) for n, dx, dy in _ZS_RING], "nm string, dx long, dy long")
     nbr = on.select(F.col("ix").alias("jx"), F.col("iy").alias("jy"))
-    flags = (on.crossJoin(F.broadcast(offs))
-               .withColumn("jx", F.col("ix") + F.col("dx"))
-               .withColumn("jy", F.col("iy") + F.col("dy"))
-               .join(nbr, ["jx", "jy"])   # inner: only ON neighbors
+    flags = (stencil.neighbors(on, _ZS_RING, nbr,   # inner: ON neighbors
+                               schema="nm string, dx long, dy long")
                .groupBy("ix", "iy")
                .agg(*[F.max(F.when(F.col("nm") == n, 1).otherwise(0))
                       .alias(n) for n, _, _ in _ZS_RING]))
@@ -3099,14 +3020,10 @@ def image_quality_long(pixels: DataFrame, clip_lo: int = 8,
                       F.col(x_col).cast("long").alias("x"),
                       F.col(y_col).cast("long").alias("y"),
                       F.col(value_col).cast("long").alias("v"))
-    offs = pixels.sparkSession.createDataFrame(
-        [(1, 0), (-1, 0), (0, 1), (0, -1)], "dx long, dy long")
     nbr = g.select("img", F.col("x").alias("jx"), F.col("y").alias("jy"),
                    F.col("v").alias("vj"))
-    lap = (g.crossJoin(F.broadcast(offs))
-            .withColumn("jx", F.col("x") + F.col("dx"))
-            .withColumn("jy", F.col("y") + F.col("dy"))
-            .join(nbr, ["img", "jx", "jy"])
+    lap = (stencil.neighbors(g, stencil.ROOK, nbr, keys=("x", "y"),
+                             by=("img",))
             .groupBy("img", "x", "y", "v")
             .agg(F.count("*").alias("k"), F.sum("vj").alias("nsum"))
             .filter(F.col("k") == 4)         # interior: all 4 neighbors
@@ -3273,15 +3190,10 @@ def debayer_grid(pixels: DataFrame, img_col: str = "img",
                       F.col(x_col).cast("long").alias("x"),
                       F.col(y_col).cast("long").alias("y"),
                       F.col(value_col).cast("long").alias("v"))
-    w9 = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    shifted = p.select(
-        "img",
-        F.explode(F.array(*[
-            F.struct((F.col("x") - dx).alias("cx"),
-                     (F.col("y") - dy).alias("cy"),
-                     F.lit(dx == 0 and dy == 0).alias("ctr"))
-            for dx, dy in w9])).alias("o"),
-        F.col("x").alias("sx"), F.col("y").alias("sy"), "v")
+    shifted = stencil.fan_out(
+        p, [(dx, dy, dx == 0 and dy == 0) for dx, dy in stencil.QUEEN_SELF],
+        fields=("ctr",), carry=[F.col("x").alias("sx"),
+                                F.col("y").alias("sy"), "v"], flat=False)
     is_r = (F.col("sx") % 2 == 0) & (F.col("sy") % 2 == 0)
     is_b = (F.col("sx") % 2 == 1) & (F.col("sy") % 2 == 1)
     is_g = ~is_r & ~is_b

@@ -142,14 +142,14 @@ def hist_quantile(df: DataFrame, group_cols: Sequence[str], value_col: str,
 # Count-Min sketch (frequency estimation / heavy hitters)
 # ---------------------------------------------------------------------------
 
-def cm_bucket_col(value_col: str, row: int, width: int):
-    """Deterministic Count-Min bucket for hash row `row`: md5 of the
-    value salted with the row index, reduced mod width.  Same
-    engine-reproducibility argument as kmv_hash_col — DuckDB twin:
-    CAST('0x' || substr(md5(v || '#cm<row>'), 1, 12) AS BIGINT) % width."""
-    key = F.concat(F.col(value_col).cast("string"), F.lit(f"#cm{row}"))
+def _md5_bucket(salt: str, m: int):
+    """Deterministic bucket of string column `v` for hash row `r`: md5 of
+    v salted with salt + r, reduced mod m.  Same engine-reproducibility
+    argument as kmv_hash_col — DuckDB twin:
+    CAST('0x' || substr(md5(v || '<salt><r>'), 1, 12) AS BIGINT) % m."""
+    key = F.concat(F.col("v"), F.lit(salt), F.col("r"))
     return (F.conv(F.substring(F.md5(key), 1, HEX_CHARS), 16, 10)
-             .cast("long") % width)
+             .cast("long") % m)
 
 
 def cm_sketch(df: DataFrame, value_col: str, depth: int = 4,
@@ -179,10 +179,7 @@ def cm_sketch(df: DataFrame, value_col: str, depth: int = 4,
              .filter(F.col("v").isNotNull())
              .crossJoin(F.broadcast(rows)))
     # bucket must be computed per (v, r) with the row salt in the key
-    b = (F.conv(F.substring(
-            F.md5(F.concat(F.col("v"), F.lit("#cm"), F.col("r"))),
-            1, HEX_CHARS), 16, 10).cast("long") % width)
-    return (fan.withColumn("b", b)
+    return (fan.withColumn("b", _md5_bucket("#cm", width))
                .groupBy("r", "b").agg(F.count("*").alias("cnt"))
                .select(F.col("r").cast("long"),
                        F.col("b").cast("long"),
@@ -211,10 +208,7 @@ def cm_estimate(sketch: DataFrame, probes: DataFrame,
     fan = (probes.select(F.col(value_col).cast("string").alias("v"))
                  .distinct()
                  .crossJoin(F.broadcast(rows)))
-    b = (F.conv(F.substring(
-            F.md5(F.concat(F.col("v"), F.lit("#cm"), F.col("r"))),
-            1, HEX_CHARS), 16, 10).cast("long") % width)
-    keyed = fan.withColumn("b", b)
+    keyed = fan.withColumn("b", _md5_bucket("#cm", width))
     j = keyed.join(F.broadcast(sketch), ["r", "b"], "left")
     return (j.groupBy("v")
              .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0)))
@@ -236,7 +230,7 @@ def bloom_build(df: DataFrame, value_col: str, n_hash: int = 4,
     re-admit rows the real join discards — never wrong, just less
     pruning).
 
-    Deterministic md5 bit positions (the cm_bucket_col idiom, salt
+    Deterministic md5 bit positions (the _md5_bucket idiom, salt
     '#bf<row>'), 32-bit words so every shifted value stays positive in
     int64 in both engines; merge = bit_or by word (bloom_merge).  Only
     shuffle: the DISTINCT + the word groupBy, bounded by n_bits/32
@@ -246,10 +240,7 @@ def bloom_build(df: DataFrame, value_col: str, n_hash: int = 4,
     fan = (df.select(F.col(value_col).cast("string").alias("v"))
              .filter(F.col("v").isNotNull()).distinct()
              .crossJoin(F.broadcast(rows)))
-    p = (F.conv(F.substring(
-            F.md5(F.concat(F.col("v"), F.lit("#bf"), F.col("r"))),
-            1, HEX_CHARS), 16, 10).cast("long") % n_bits)
-    word = fan.withColumn("p", p).select(
+    word = fan.withColumn("p", _md5_bucket("#bf", n_bits)).select(
         (F.col("p") / 32).cast("long").alias("w"),
         F.expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 32 AS INT))")
          .alias("m"))
@@ -277,10 +268,7 @@ def bloom_probe(sketch: DataFrame, probes: DataFrame,
     fan = (probes.select(F.col(value_col).cast("string").alias("v"))
                  .filter(F.col("v").isNotNull()).distinct()
                  .crossJoin(F.broadcast(rows)))
-    p = (F.conv(F.substring(
-            F.md5(F.concat(F.col("v"), F.lit("#bf"), F.col("r"))),
-            1, HEX_CHARS), 16, 10).cast("long") % n_bits)
-    keyed = fan.withColumn("p", p).select(
+    keyed = fan.withColumn("p", _md5_bucket("#bf", n_bits)).select(
         "v", (F.col("p") / 32).cast("long").alias("w"),
         (F.col("p") % 32).cast("int").alias("b"))
     j = keyed.join(F.broadcast(sketch), ["w"], "left")

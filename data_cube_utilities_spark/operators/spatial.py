@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import cells
+from . import stencil
 from .fixpoint import (checkpoint, connected_components, iterate,
                        materialized)
 
@@ -481,14 +482,9 @@ def morans_i_grid(cells_df: DataFrame, ix_col: str = "ix",
         F.col(iy_col).cast("long").alias("iy"),
         (F.col("_n") * F.col(value_col).cast("long") - F.col("_s"))
         .alias("z"), "_n")
-    offs = cells_df.sparkSession.createDataFrame(
-        [(1, 0), (-1, 0), (0, 1), (0, -1)], "dx long, dy long")
     nbr = z.select(F.col("ix").alias("jx"), F.col("iy").alias("jy"),
                    F.col("z").alias("zj"))
-    edges = (z.crossJoin(F.broadcast(offs))
-              .withColumn("jx", F.col("ix") + F.col("dx"))
-              .withColumn("jy", F.col("iy") + F.col("dy"))
-              .join(nbr, ["jx", "jy"]))
+    edges = stencil.neighbors(z, stencil.ROOK, nbr)
     num_w = edges.agg(F.sum(F.col("z") * F.col("zj")).alias("num"),
                       F.count("*").alias("w_pairs"))
     den = z.agg(F.sum(F.col("z") * F.col("z")).alias("den"),
@@ -517,20 +513,15 @@ def semivariogram_grid(cells_df: DataFrame, max_lag: int = 4,
     itself per the broadcast lag table — co-partitioned on the cell key,
     no cross product.  Returns (lag, n_pairs, sq_sum, gamma) with gamma
     the one fixed-order double division."""
-    lags = cells_df.sparkSession.createDataFrame(
-        [(h, h, 0) for h in range(1, max_lag + 1)]
-        + [(h, 0, h) for h in range(1, max_lag + 1)],
-        "lag long, dx long, dy long")
+    lags = ([(h, h, 0) for h in range(1, max_lag + 1)]
+            + [(h, 0, h) for h in range(1, max_lag + 1)])
     a = cells_df.select(F.col(ix_col).cast("long").alias("ix"),
                         F.col(iy_col).cast("long").alias("iy"),
                         F.col(value_col).cast("long").alias("va"))
     b = cells_df.select(F.col(ix_col).cast("long").alias("jx"),
                         F.col(iy_col).cast("long").alias("jy"),
                         F.col(value_col).cast("long").alias("vb"))
-    pairs = (a.crossJoin(F.broadcast(lags))
-              .withColumn("jx", F.col("ix") + F.col("dx"))
-              .withColumn("jy", F.col("iy") + F.col("dy"))
-              .join(b, ["jx", "jy"]))
+    pairs = stencil.neighbors(a, lags, b, schema="lag long, dx long, dy long")
     d = F.col("va") - F.col("vb")
     return (pairs.groupBy("lag")
                  .agg(F.count("*").alias("n_pairs"),
@@ -572,14 +563,9 @@ def getis_ord_grid(cells_df: DataFrame, ix_col: str = "ix",
     g = cells_df.select(F.col(ix_col).cast("long").alias("ix"),
                         F.col(iy_col).cast("long").alias("iy"),
                         F.col(value_col).cast("long").alias("v"))
-    offs = cells_df.sparkSession.createDataFrame(
-        [(0, 0), (1, 0), (-1, 0), (0, 1), (0, -1)], "dx long, dy long")
     nbr = g.select(F.col("ix").alias("jx"), F.col("iy").alias("jy"),
                    F.col("v").alias("vj"))
-    local = (g.crossJoin(F.broadcast(offs))
-              .withColumn("jx", F.col("ix") + F.col("dx"))
-              .withColumn("jy", F.col("iy") + F.col("dy"))
-              .join(nbr, ["jx", "jy"])
+    local = (stencil.neighbors(g, stencil.ROOK_SELF, nbr)
               .groupBy("ix", "iy")
               .agg(F.max("v").alias("_v_keep"),
                    F.sum("vj").alias("local_sum"),
@@ -636,15 +622,11 @@ def d8_flow_grid(cells_df: DataFrame, ix_col: str = "ix",
                         F.col(iy_col).cast("long").alias("iy"),
                         F.col(value_col).cast("long").alias("v")) \
                 .localCheckpoint(eager=False)
-    offs = cells_df.sparkSession.createDataFrame(
-        D8_OFFSETS, "dx long, dy long, code long, w long")
     nbr = g.select(F.col("ix").alias("jx"), F.col("iy").alias("jy"),
                    F.col("v").alias("vj"))
     drop = F.col("v") - F.col("vj")
-    cand = (g.crossJoin(F.broadcast(offs))
-             .withColumn("jx", F.col("ix") + F.col("dx"))
-             .withColumn("jy", F.col("iy") + F.col("dy"))
-             .join(nbr, ["jx", "jy"])
+    cand = (stencil.neighbors(g, D8_OFFSETS, nbr,
+                              schema="dx long, dy long, code long, w long")
              .filter(drop > 0)
              .withColumn("rank", drop * drop * F.col("w")))
     win = Window.partitionBy("ix", "iy").orderBy(
@@ -747,14 +729,9 @@ def local_morans_grid(cells_df: DataFrame, ix_col: str = "ix",
                  (F.col("_n") * F.col(value_col).cast("long") - F.col("_s"))
                  .alias("zs"), "_n"))
     den = g.agg(F.sum(F.col("zs") * F.col("zs")).alias("_den"))
-    offs = cells_df.sparkSession.createDataFrame(
-        [(1, 0), (-1, 0), (0, 1), (0, -1)], "dx long, dy long")
     nbr = g.select(F.col("ix").alias("jx"), F.col("iy").alias("jy"),
                    F.col("zs").alias("zj"))
-    local = (g.crossJoin(F.broadcast(offs))
-              .withColumn("jx", F.col("ix") + F.col("dx"))
-              .withColumn("jy", F.col("iy") + F.col("dy"))
-              .join(nbr, ["jx", "jy"])
+    local = (stencil.neighbors(g, stencil.ROOK, nbr)
               .groupBy("ix", "iy")
               .agg(F.max("v").alias("v"), F.max("zs").alias("zs"),
                    F.max("_n").alias("_n"),
@@ -846,16 +823,10 @@ def terrain_position_grid(cells_df: DataFrame, ix_col: str = "ix",
     g = cells_df.select(F.col(ix_col).cast("long").alias("ix"),
                         F.col(iy_col).cast("long").alias("iy"),
                         F.col(value_col).cast("long").alias("v"))
-    offs = cells_df.sparkSession.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-         if (dx, dy) != (0, 0)], "dx long, dy long")
     nbr = g.select(F.col("ix").alias("jx"), F.col("iy").alias("jy"),
                    F.col("v").alias("vj"))
     d = F.col("v") - F.col("vj")
-    agg = (g.crossJoin(F.broadcast(offs))
-            .withColumn("jx", F.col("ix") + F.col("dx"))
-            .withColumn("jy", F.col("iy") + F.col("dy"))
-            .join(nbr, ["jx", "jy"])
+    agg = (stencil.neighbors(g, stencil.QUEEN, nbr)
             .groupBy("ix", "iy")
             .agg(F.max("v").alias("v"), F.count("*").alias("k"),
                  F.sum("vj").alias("nbr_sum"),
@@ -1042,15 +1013,9 @@ def majority_filter_grid(cells_df: DataFrame, ix_col: str = "ix",
     g = cells_df.select(F.col(ix_col).cast("long").alias("ix"),
                         F.col(iy_col).cast("long").alias("iy"),
                         F.col(value_col).cast("long").alias("v"))
-    offs = cells_df.sparkSession.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
-        "dx long, dy long")
     nbr = g.select(F.col("ix").alias("jx"), F.col("iy").alias("jy"),
                    F.col("v").alias("vj"))
-    counts = (g.crossJoin(F.broadcast(offs))
-               .withColumn("jx", F.col("ix") + F.col("dx"))
-               .withColumn("jy", F.col("iy") + F.col("dy"))
-               .join(nbr, ["jx", "jy"])
+    counts = (stencil.neighbors(g, stencil.QUEEN_SELF, nbr)
                .groupBy("ix", "iy", "vj")
                .agg(F.count("*").alias("cnt")))
     win = Window.partitionBy("ix", "iy").orderBy(F.desc("cnt"), F.asc("vj"))
@@ -1085,15 +1050,9 @@ def median_filter_grid(cells_df: DataFrame, ix_col: str = "ix",
     g = cells_df.select(F.col(ix_col).cast("long").alias("ix"),
                         F.col(iy_col).cast("long").alias("iy"),
                         F.col(value_col).cast("long").alias("v"))
-    offs = cells_df.sparkSession.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
-        "dx long, dy long")
     nbr = g.select(F.col("ix").alias("jx"), F.col("iy").alias("jy"),
                    F.col("v").alias("vj"))
-    win = (g.crossJoin(F.broadcast(offs))
-            .withColumn("jx", F.col("ix") + F.col("dx"))
-            .withColumn("jy", F.col("iy") + F.col("dy"))
-            .join(nbr, ["jx", "jy"])
+    win = (stencil.neighbors(g, stencil.QUEEN_SELF, nbr)
             .groupBy("ix", "iy")
             .agg(F.array_sort(F.collect_list("vj")).alias("w")))
     med = win.select(
@@ -1151,14 +1110,9 @@ def getis_ord_series(series_df: DataFrame, ix_col: str = "ix",
         F.count("*").alias("_n"),
         F.sum("x").alias("_s"),
         F.sum(F.col("x") * F.col("x")).alias("_ss"))
-    offs = series_df.sparkSession.createDataFrame(
-        [(0, 0), (1, 0), (-1, 0), (0, 1), (0, -1)], "dx long, dy long")
     nbr = ser.select("t", F.col("ix").alias("jx"),
                      F.col("iy").alias("jy"), F.col("x").alias("xj"))
-    local = (ser.crossJoin(F.broadcast(offs))
-                .withColumn("jx", F.col("ix") + F.col("dx"))
-                .withColumn("jy", F.col("iy") + F.col("dy"))
-                .join(nbr, ["t", "jx", "jy"])
+    local = (stencil.neighbors(ser, stencil.ROOK_SELF, nbr, by=("t",))
                 .groupBy("t", "ix", "iy")
                 .agg(F.sum("xj").alias("ls"), F.count("*").alias("k")))
     j = local.join(F.broadcast(stats), "t")
@@ -1408,17 +1362,13 @@ def ripley_k_counts(points_df: DataFrame, radii: "Sequence[int]",
                          F.col(y_col).cast("long").alias("y"))
     b = p.select("x", "y", (F.floor(F.col("x") / rmax)).alias("bx"),
                  (F.floor(F.col("y") / rmax)).alias("by"))
-    offs = points_df.sparkSession.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
-        "dx long, dy long")
-    probe = (b.crossJoin(F.broadcast(offs))
-              .select("x", "y", (F.col("bx") + F.col("dx")).alias("bx"),
-                      (F.col("by") + F.col("dy")).alias("by")))
     other = b.select(F.col("x").alias("ox"), F.col("y").alias("oy"),
                      "bx", "by")
     dd = ((F.col("x") - F.col("ox")) * (F.col("x") - F.col("ox"))
           + (F.col("y") - F.col("oy")) * (F.col("y") - F.col("oy")))
-    pairs = (probe.join(other, ["bx", "by"])
+    pairs = (stencil.neighbors(b, stencil.QUEEN_SELF, other,
+                               keys=("bx", "by"), to=("bx", "by"),
+                               keep=("x", "y"))
                   .filter(((F.col("x") != F.col("ox"))
                            | (F.col("y") != F.col("oy")))
                           & (dd <= rmax * rmax))
@@ -1457,19 +1407,14 @@ def knox_pair_counts(points_df: DataFrame, r_space: int, r_time: int,
     d2 = ((F.col("x") - F.col("ox")) * (F.col("x") - F.col("ox"))
           + (F.col("y") - F.col("oy")) * (F.col("y") - F.col("oy")))
     dt = F.abs(F.col("t") - F.col("ot"))
-    spark = points_df.sparkSession
 
     sb = p.select("x", "y", "t", F.floor(F.col("x") / r_space).alias("bx"),
                   F.floor(F.col("y") / r_space).alias("by"))
-    offs9 = spark.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
-        "dx long, dy long")
-    probe = (sb.crossJoin(F.broadcast(offs9))
-               .select("x", "y", "t", (F.col("bx") + F.col("dx")).alias("bx"),
-                       (F.col("by") + F.col("dy")).alias("by")))
     other = sb.select(F.col("x").alias("ox"), F.col("y").alias("oy"),
                       F.col("t").alias("ot"), "bx", "by")
-    sp = (probe.join(other, ["bx", "by"])
+    sp = (stencil.neighbors(sb, stencil.QUEEN_SELF, other,
+                            keys=("bx", "by"), to=("bx", "by"),
+                            keep=("x", "y", "t"))
                .filter(neq & (d2 <= r_space * r_space))
                .select(dt.alias("adt")))
     space_agg = sp.agg(
@@ -1477,12 +1422,11 @@ def knox_pair_counts(points_df: DataFrame, r_space: int, r_time: int,
         F.sum((F.col("adt") <= r_time).cast("long")).alias("pairs_both"))
 
     tb = p.select("x", "y", "t", F.floor(F.col("t") / r_time).alias("bt"))
-    offs3 = spark.createDataFrame([(-1,), (0,), (1,)], "dt long")
-    tprobe = (tb.crossJoin(F.broadcast(offs3))
-                .select("x", "y", "t", (F.col("bt") + F.col("dt")).alias("bt")))
     tother = tb.select(F.col("x").alias("ox"), F.col("y").alias("oy"),
                        F.col("t").alias("ot"), "bt")
-    time_agg = (tprobe.join(tother, ["bt"])
+    time_agg = (stencil.neighbors(tb, stencil.span(1), tother, keys=("bt",),
+                                  to=("bt",), schema="dt long",
+                                  deltas=("dt",), keep=("x", "y", "t"))
                       .filter(neq & (dt <= r_time))
                       .agg(F.count("*").cast("long").alias("pairs_time")))
 
@@ -1516,22 +1460,17 @@ def cost_distance_grid(cells_df: DataFrame, ix_col: str = "ix",
     min cost over paths of <= max_rounds hops — the hop-bounded
     configuration whose unrolled-SQL twin is a true hash oracle (the
     ivf_ann_exact trick); full runs converge-check each round."""
-    spark = cells_df.sparkSession
     g = cells_df.select(F.col(ix_col).cast("long").alias("ix"),
                         F.col(iy_col).cast("long").alias("iy"),
                         F.col(cost_col).cast("long").alias("cost"),
                         F.col(source_col).cast("boolean").alias("src"))
-    offs = spark.createDataFrame(
-        [(1, 0), (-1, 0), (0, 1), (0, -1)], "dx long, dy long")
     with materialized(g) as g:
         nbr = g.select(F.col("ix").alias("nx"), F.col("iy").alias("ny"),
                        "cost")
 
         def relax(dist: DataFrame) -> DataFrame:
-            cand = (dist.crossJoin(F.broadcast(offs))
-                        .select((F.col("ix") + F.col("dx")).alias("nx"),
-                                (F.col("iy") + F.col("dy")).alias("ny"), "d")
-                        .join(nbr, ["nx", "ny"])
+            cand = (stencil.neighbors(dist, stencil.ROOK, nbr,
+                                      to=("nx", "ny"), keep=("d",))
                         .select(F.col("nx").alias("ix"),
                                 F.col("ny").alias("iy"),
                                 (F.col("d") + F.col("cost")).alias("d")))
@@ -1788,14 +1727,8 @@ def dbscan_points(points: DataFrame, eps: int, min_pts: int,
     bx = F.floor(F.col("x") / eps)
     by = F.floor(F.col("y") / eps)
     a = p.select("pid", "x", "y", bx.alias("bx"), by.alias("by"))
-    probe = (a.select("pid", "x", "y",
-                      F.explode(F.array(*[
-                          F.struct((F.col("bx") + dx).alias("nbx"),
-                                   (F.col("by") + dy).alias("nby"))
-                          for dx in (-1, 0, 1) for dy in (-1, 0, 1)]))
-                      .alias("o"))
-              .select("pid", "x", "y", F.col("o.nbx").alias("bx"),
-                      F.col("o.nby").alias("by")))
+    probe = stencil.fan_out(a, stencil.QUEEN_SELF, keys=("bx", "by"),
+                            to=("nbx", "nby"), by=("pid", "x", "y"), sign=1)
     b = a.select(F.col("pid").alias("qid"), F.col("x").alias("qx"),
                  F.col("y").alias("qy"), "bx", "by")
     d2 = ((F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx"))
@@ -2035,19 +1968,13 @@ def kde_surface(points_df: DataFrame, radius: int = 3,
     materialize mostly zeros at 100 TB for nothing).  n_points carries
     the raw per-cell count so callers can separate mass from spread."""
     offs = [(dx, dy, radius * radius + 1 - dx * dx - dy * dy)
-            for dx in range(-radius, radius + 1)
-            for dy in range(-radius, radius + 1)
-            if dx * dx + dy * dy <= radius * radius]
+            for dx, dy in stencil.disk(radius)]
     counts = (points_df.select(F.col(x_col).cast("long").alias("x"),
                                F.col(y_col).cast("long").alias("y"))
                        .groupBy("x", "y")
                        .agg(F.count("*").alias("c")))
-    fan = counts.select(
-        "c", F.explode(F.array(*[
-            F.struct((F.col("x") + dx).alias("cx"),
-                     (F.col("y") + dy).alias("cy"),
-                     F.lit(w).alias("w"))
-            for dx, dy, w in offs])).alias("o"))
+    fan = stencil.fan_out(counts, offs, fields=("w",), by=("c",), sign=1,
+                          flat=False)
     return (fan.groupBy(F.col("o.cx").alias("cx"),
                         F.col("o.cy").alias("cy"))
                .agg(F.sum(F.col("c") * F.col("o.w"))
@@ -2391,15 +2318,10 @@ def bilateral_filter_grid(cells_df: DataFrame, range_cap: int = 32,
                         F.col(iy_col).cast("long").alias("iy"),
                         F.col(value_col).cast("long").alias("v"))
     b4 = {-2: 1, -1: 4, 0: 6, 1: 4, 2: 1}
-    offs = cells_df.sparkSession.createDataFrame(
-        [(dx, dy, b4[dx] * b4[dy]) for dx in b4 for dy in b4],
-        "dx long, dy long, ws long")
+    offs = [(dx, dy, b4[dx] * b4[dy]) for dx, dy in stencil.square(2)]
     nbr = g.select(F.col("ix").alias("jx"), F.col("iy").alias("jy"),
                    F.col("v").alias("vj"))
-    win = (g.crossJoin(F.broadcast(offs))
-            .withColumn("jx", F.col("ix") + F.col("dx"))
-            .withColumn("jy", F.col("iy") + F.col("dy"))
-            .join(nbr, ["jx", "jy"])
+    win = (stencil.neighbors(g, offs, nbr, schema="dx long, dy long, ws long")
             .withColumn("wr", F.greatest(
                 F.lit(range_cap) - F.abs(F.col("vj") - F.col("v")),
                 F.lit(0)))
@@ -2487,15 +2409,10 @@ def least_cost_path_grid(cells_df: DataFrame, target: "tuple[int, int]",
                         F.col(iy_col).cast("long").alias("iy"),
                         F.col(cost_col).cast("long").alias("cost"),
                         F.col(source_col).cast("boolean").alias("src"))
-    offs = cells_df.sparkSession.createDataFrame(
-        [(1, 0), (-1, 0), (0, 1), (0, -1)], "dx long, dy long")
     with materialized(acc.join(g, ["ix", "iy"])) as a:
         nb = a.select(F.col("ix").alias("ux"), F.col("iy").alias("uy"),
                       F.col("acc").alias("uacc"))
-        cand = (a.crossJoin(F.broadcast(offs))
-                 .withColumn("ux", F.col("ix") + F.col("dx"))
-                 .withColumn("uy", F.col("iy") + F.col("dy"))
-                 .join(nb, ["ux", "uy"])
+        cand = (stencil.neighbors(a, stencil.ROOK, nb, to=("ux", "uy"))
                  .filter(F.col("uacc") + F.col("cost") == F.col("acc")))
         best = (cand.groupBy("ix", "iy")
                     .agg(F.min(F.struct("ux", "uy")).alias("p"))

@@ -498,19 +498,10 @@ def doc_fingerprint(df: DataFrame, id_col: str = "doc_id",
 # similarity search over embeddings
 # ---------------------------------------------------------------------------
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                              F.lit(0.0), lambda acc, x: acc + x))
-
-
 def _cosine_col(va, vb):
     """Exact cosine(va, vb) as an Arrow-vectorized kernel — BIT-IDENTICAL
-    to the _dot/_norm higher-order form: the fold is the same sequential
+    to the Spark higher-order form (F.aggregate over the zip_with
+    products, F.sqrt of the aggregated squares): the fold is the same sequential
     ((0 + p1) + p2) + ... chain per element (vectorized across rows, not
     within a row), each p_i one multiply, each norm a sqrt of the same
     chain, and a zero denominator yields NULL (nan) like F.nullif.
@@ -520,7 +511,7 @@ def _cosine_col(va, vb):
     large ones (the 200k-row IVF batch scan: 552 s -> ~10 s). Rounding
     stays Spark-side (F.round HALF_UP; np.round is banker's).
 
-    NULL embeddings propagate to NULL cosine (the _dot/_norm twin's
+    NULL embeddings propagate to NULL cosine (the higher-order form's
     semantics): np.stack over a batch containing None would otherwise
     crash the task — one null vector in a 100 TB corpus must not turn a
     query into a job failure (ADVICE r4)."""

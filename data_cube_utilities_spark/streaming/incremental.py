@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import synth
+from ..operators import sketches, stencil
 
 
 def read_image_stream(spark: SparkSession, path: str,
@@ -165,24 +166,11 @@ def streaming_cm_sketch(stream: DataFrame, value_col: str,
     depth*width integers of state, mergeable across independent streams
     by cell-wise addition (sketches.cm_merge).
 
-    Deterministic md5 buckets (same geometry as sketches.cm_sketch) —
-    a sketch snapshot taken today re-derives byte-identically from the
+    The plan IS sketches.cm_sketch (its broadcast row fan-out is a
+    stream-static join), so the md5 buckets are the batch ones — a
+    sketch snapshot taken today re-derives byte-identically from the
     raw archive tomorrow."""
-    from ..operators.sketches import HEX_CHARS
-
-    rows = stream.sparkSession.createDataFrame(
-        [(r,) for r in range(depth)], "r long")
-    fan = (stream.select(F.col(value_col).cast("string").alias("v"))
-                 .filter(F.col("v").isNotNull())
-                 .crossJoin(F.broadcast(rows)))
-    b = (F.conv(F.substring(
-            F.md5(F.concat(F.col("v"), F.lit("#cm"), F.col("r"))),
-            1, HEX_CHARS), 16, 10).cast("long") % width)
-    return (fan.withColumn("b", b)
-               .groupBy("r", "b").agg(F.count("*").alias("cnt"))
-               .select(F.col("r").cast("long"),
-                       F.col("b").cast("long"),
-                       F.col("cnt").cast("long").alias("cnt")))
+    return sketches.cm_sketch(stream, value_col, depth, width)
 
 
 def space_time_pair_stream(events: DataFrame, r_space: int,
@@ -210,14 +198,11 @@ def space_time_pair_stream(events: DataFrame, r_space: int,
                          F.col(x_col).cast("long").alias("x"),
                          F.col(y_col).cast("long").alias("y"),
                          F.col(ts_col).cast("timestamp").alias("ts"))
-    offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                     for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    probe = (base.withColumn("o", F.explode(offs))
-                 .select("id", "x", "y", "ts",
-                         (F.floor(F.col("x") / r_space)
-                          + F.col("o.dx")).alias("bx"),
-                         (F.floor(F.col("y") / r_space)
-                          + F.col("o.dy")).alias("by")))
+    probe = stencil.shifted(base, stencil.QUEEN_SELF,
+                            keys=(F.floor(F.col("x") / r_space),
+                                  F.floor(F.col("y") / r_space)),
+                            to=("bx", "by"), keep=("id", "x", "y", "ts"),
+                            inline=True)
     match = base.select(F.col("id").alias("mid"), F.col("x").alias("mx"),
                         F.col("y").alias("my"), F.col("ts").alias("mts"),
                         F.floor(F.col("x") / r_space).alias("bx"),
