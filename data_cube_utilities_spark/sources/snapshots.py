@@ -9,18 +9,29 @@ semantics are emulated on plain Parquet + JSON:
     snapshots/v00003.json                          manifest (see below)
     VERSION                                        atomic pointer (tmp+rename)
 
-Manifest: {version, parent, operation (overwrite|append), partition_cols,
-partitions: [{values, row_count, metrics{col: {min,max}}}], lineage
-(free-form provenance dict: inputs, step name, parameters), created_utc}.
+Manifest: {version, parent, operation (overwrite|append|delete|merge),
+schema (the written DataFrame's `schema.jsonValue()`), partition_cols,
+partitions: [{values, row_count, metrics{col: {min,max}}}], total_rows,
+lineage (free-form provenance dict: inputs, step name, parameters),
+created_utc}; delete and merge commits add delete_cols, and a merge adds
+delete_schema (its keyset's schema).
 
 Guarantees:
 - readers only ever see fully-committed data (pointer flips after the
   parquet write completes; half-written dirs are invisible);
 - resume: a pipeline step that already committed (same step key in lineage)
   is skipped — `latest_step()` / `has_step()`;
-- per-partition row counts + column min/max are computed with ONE grouped
-  aggregate over the written data (no per-file driver loops), so manifests
-  stay cheap at 10^5 partitions;
+- scans are planned from the manifests alone: every commit dir is read
+  with its recorded schema, so planning a read runs no Spark job and
+  partition columns keep their declared types (a string "007" stays a
+  string).  A manifest without `schema` (written before it was recorded)
+  still reads, by inference;
+- per-partition row counts + column min/max come from the Parquet footers
+  the write just produced, read on the driver: a commit runs its write
+  job(s) and nothing else.  A chunk whose footer has no bounds (Spark's
+  INT96 timestamps, binaries over parquet-mr's 4 KB stats limit) records
+  a null metric, which never prunes; zero-row files are skipped, so an
+  empty commit records `partitions: []`;
 - time travel: `read(spark, version=N)` reconstructs any snapshot.
 
 Swap-in path: if real Iceberg jars appear, `commit` maps to
@@ -39,9 +50,13 @@ import json
 import os
 import time
 from collections.abc import Sequence
+from functools import reduce
+from urllib.parse import unquote
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class SnapshotTable:
@@ -123,52 +138,39 @@ class SnapshotTable:
         before this version, without rewriting any data file."""
         assert operation in ("overwrite", "append", "delete")
         version, parent = self._next_version()
-        dir_name = f"v{version:05d}"
-        out_dir = os.path.join(self.data_dir, dir_name)
-
+        out_dir = os.path.join(self.data_dir, f"v{version:05d}")
+        extra = {}
         if operation == "delete":
             delete_cols = list(delete_cols or df.columns)
             df = df.select(*delete_cols).distinct()
-        writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(out_dir)
+            extra["delete_cols"] = delete_cols
+        _write(df, out_dir, partition_cols)
+        return self._record(version, parent, operation, out_dir, df.schema,
+                            partition_cols, metrics_cols, lineage or {},
+                            **extra)
 
-        # per-partition stats with ONE aggregate over what was written
-        spark = df.sparkSession
-        written = spark.read.parquet(out_dir)
-        aggs = [F.count("*").alias("__rows")]
-        for c in metrics_cols:
-            aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
-        if partition_cols:
-            stats = written.groupBy(*partition_cols).agg(*aggs).collect()
-        else:
-            stats = written.agg(*aggs).collect()
-        partitions = []
-        for r in stats:
-            d = r.asDict()
-            entry = {
-                "values": {c: _json_safe(d[c]) for c in partition_cols},
-                "row_count": d["__rows"],
-                "metrics": {c: {"min": _json_safe(d[f"__min_{c}"]),
-                                "max": _json_safe(d[f"__max_{c}"])}
-                            for c in metrics_cols},
-            }
-            partitions.append(entry)
-
+    def _record(self, version: int, parent: int | None, operation: str,
+                written: str, schema: StructType,
+                partition_cols: Sequence[str], metrics_cols: Sequence[str],
+                lineage: dict, **extra) -> int:
+        """Write the manifest of a commit whose data files are under
+        `written`, then flip the pointer to it."""
+        schema = schema.jsonValue()
+        partitions = _footer_partitions(written, schema, partition_cols,
+                                        metrics_cols)
         manifest = {
             "version": version,
             "parent": parent,
             "operation": operation,
-            "data_dir": dir_name,
+            "data_dir": f"v{version:05d}",
+            "schema": schema,
             "partition_cols": list(partition_cols),
             "partitions": partitions,
             "total_rows": int(sum(p["row_count"] for p in partitions)),
-            "lineage": lineage or {},
+            "lineage": lineage,
             "created_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            **extra,
         }
-        if operation == "delete":
-            manifest["delete_cols"] = list(delete_cols)
         with open(self._manifest_path(version), "w") as f:
             json.dump(manifest, f, indent=1, sort_keys=True)
         self._flip_pointer(version)
@@ -200,49 +202,19 @@ class SnapshotTable:
         O(|source|) written bytes: the existing table is NOT rewritten
         (Iceberg's merge-on-read MERGE, not copy-on-write)."""
         version, parent = self._next_version()
-        dir_name = f"v{version:05d}"
-        out_dir = os.path.join(self.data_dir, dir_name)
-        key_cols = list(key_cols)
-
-        w = source.write.mode("overwrite")
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.parquet(os.path.join(out_dir, "inserts"))
-        source.select(*key_cols).distinct().write.mode("overwrite") \
-              .parquet(os.path.join(out_dir, "deletes"))
-
-        spark = source.sparkSession
-        written = spark.read.parquet(os.path.join(out_dir, "inserts"))
-        aggs = [F.count("*").alias("__rows")]
-        for c in metrics_cols:
-            aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
-        if partition_cols:
-            stats = written.groupBy(*partition_cols).agg(*aggs).collect()
-        else:
-            stats = written.agg(*aggs).collect()
-        partitions = [{
-            "values": {c: _json_safe(r.asDict()[c]) for c in partition_cols},
-            "row_count": r.asDict()["__rows"],
-            "metrics": {c: {"min": _json_safe(r.asDict()[f"__min_{c}"]),
-                            "max": _json_safe(r.asDict()[f"__max_{c}"])}
-                        for c in metrics_cols},
-        } for r in stats]
-        manifest = {
-            "version": version,
-            "parent": parent,
-            "operation": "merge",
-            "data_dir": dir_name,
-            "partition_cols": list(partition_cols),
-            "partitions": partitions,
-            "total_rows": int(sum(p["row_count"] for p in partitions)),
-            "delete_cols": key_cols,
-            "lineage": lineage or {"op": "merge_upsert"},
-            "created_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        with open(self._manifest_path(version), "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        self._flip_pointer(version)
-        return version
+        out_dir = os.path.join(self.data_dir, f"v{version:05d}")
+        inserts = os.path.join(out_dir, "inserts")
+        _write(source, inserts, partition_cols)
+        # the keyset comes from the inserts just written, so the source
+        # plan is evaluated once
+        keys = _scan(source.sparkSession, inserts, source.schema.jsonValue()) \
+            .select(*key_cols).distinct()
+        _write(keys, os.path.join(out_dir, "deletes"))
+        return self._record(version, parent, "merge", inserts, source.schema,
+                            partition_cols, metrics_cols,
+                            lineage or {"op": "merge_upsert"},
+                            delete_cols=list(key_cols),
+                            delete_schema=keys.schema.jsonValue())
 
     def compact(self, spark: SparkSession, n_files: int,
                 partition_cols: Sequence[str] = (),
@@ -279,16 +251,19 @@ class SnapshotTable:
             v = m.get("parent")
         return list(reversed(chain))
 
-    @staticmethod
-    def _entry_paths(m: dict, base: str) -> tuple[str | None, str | None]:
-        """(data_path, delete_path) a manifest contributes to a read."""
-        op = m["operation"]
+    def _entry_paths(self, m: dict) -> tuple[tuple | None, tuple | None]:
+        """((data_path, schema), (delete_path, schema)) a manifest
+        contributes to a read; None where it contributes no such side.
+        A schema is None on manifests written before it was recorded."""
+        base = os.path.join(self.data_dir, m["data_dir"])
+        op, schema = m["operation"], m.get("schema")
         if op in ("overwrite", "append"):
-            return base, None
+            return (base, schema), None
         if op == "delete":
-            return None, base
+            return None, (base, schema)
         if op == "merge":
-            return os.path.join(base, "inserts"), os.path.join(base, "deletes")
+            return ((os.path.join(base, "inserts"), schema),
+                    (os.path.join(base, "deletes"), m.get("delete_schema")))
         raise ValueError(f"unknown operation {op!r}")
 
     def _live_dirs(self, version: int) -> list[str]:
@@ -304,7 +279,8 @@ class SnapshotTable:
         dir granularity — and applies the same predicate row-level, so
         the result is identical with or without pruning (partition-dir
         pruning within a surviving commit dir is Catalyst's, via the
-        pushed filter).
+        pushed filter).  Every dir is scanned with its recorded schema,
+        so building the read runs no Spark job.
 
         Equality deletes (delete/merge commits) apply merge-on-read: a
         row committed at version c is dropped iff some later delete
@@ -316,46 +292,30 @@ class SnapshotTable:
         if v is None:
             raise FileNotFoundError(f"no committed snapshot at {self.path}")
         chain = self._chain(v)
-        keep = set(self.pruned_dirs(v, where)) if where else None
+        keep = set(self._pruned(chain, where)) if where else None
         data, dels, del_cols = [], [], None
         for m in chain:
-            base = os.path.join(self.data_dir, m["data_dir"])
-            dpath, xpath = self._entry_paths(m, base)
-            if dpath is not None and (keep is None or dpath in keep):
-                data.append((m["version"], dpath))
-            if xpath is not None:
+            dside, xside = self._entry_paths(m)
+            if dside is not None and (keep is None or dside[0] in keep):
+                data.append((m["version"], _scan(spark, *dside)))
+            if xside is not None:
                 cols = list(m["delete_cols"])
                 if del_cols is not None and cols != del_cols:
                     raise ValueError(
                         f"mixed equality-delete keys in one chain: "
                         f"{del_cols} vs {cols} (v{m['version']})")
                 del_cols = cols
-                dels.append((m["version"], xpath))
+                dels.append((m["version"], _scan(spark, *xside)))
         if not data:
             # predicate pruned everything: schema-only empty frame
-            first = self._entry_paths(
-                chain[0], os.path.join(self.data_dir, chain[0]["data_dir"]))[0]
-            return self._apply_where(spark.read.parquet(first).limit(0), where)
-
+            first = _scan(spark, *self._entry_paths(chain[0])[0])
+            return self._apply_where(first.limit(0), where)
         if not dels:
-            out = spark.read.parquet(data[0][1])
-            for _, d in data[1:]:
-                out = out.unionByName(spark.read.parquet(d),
-                                      allowMissingColumns=True)
-            return self._apply_where(out, where)
+            return self._apply_where(_union([d for _, d in data]), where)
 
-        parts = []
-        for ver, d in data:
-            parts.append(spark.read.parquet(d)
-                         .withColumn("__commit", F.lit(ver)))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        dk = spark.read.parquet(dels[0][1]) \
-                  .withColumn("__dver", F.lit(dels[0][0]))
-        for ver, d in dels[1:]:
-            dk = dk.unionByName(spark.read.parquet(d)
-                                .withColumn("__dver", F.lit(ver)))
+        out = _union([d.withColumn("__commit", F.lit(ver))
+                      for ver, d in data])
+        dk = _union([d.withColumn("__dver", F.lit(ver)) for ver, d in dels])
         dagg = dk.groupBy(*del_cols).agg(F.max("__dver").alias("__last_del"))
         out = out.join(F.broadcast(dagg), on=del_cols, how="left") \
                  .filter(F.col("__last_del").isNull()
@@ -375,6 +335,10 @@ class SnapshotTable:
         partitions overlaps every bound; bounds on columns without
         recorded numeric metrics (or non-numeric mins) never prune —
         pruning is an optimization, never a filter."""
+        return self._pruned(self._chain(version), where)
+
+    def _pruned(self, chain: list[dict], where: dict) -> list[str]:
+        """pruned_dirs over an already-parsed chain of manifests."""
         def overlaps(entry: dict) -> bool:
             for c, (lo, hi) in where.items():
                 stats = entry.get("metrics", {}).get(c)
@@ -394,13 +358,12 @@ class SnapshotTable:
             return True
 
         out = []
-        for m in self._chain(version):
-            dpath, _ = self._entry_paths(
-                m, os.path.join(self.data_dir, m["data_dir"]))
-            if dpath is None:
+        for m in chain:
+            dside, _ = self._entry_paths(m)
+            if dside is None:
                 continue   # delete commits contribute no data rows
             if any(overlaps(p) for p in m["partitions"]) or not m["partitions"]:
-                out.append(dpath)
+                out.append(dside[0])
         return out
 
     def read_changes(self, spark: SparkSession, from_version: int,
@@ -415,7 +378,7 @@ class SnapshotTable:
             raise ValueError(f"bad incremental range ({from_version}, {to_v})")
         if from_version == to_v:
             return self.read(spark, to_v).limit(0)
-        dirs = []
+        scans = []
         v: int | None = to_v
         while v is not None and v != from_version:
             m = self.manifest(v)
@@ -424,15 +387,12 @@ class SnapshotTable:
                     f"v{v} is a {m['operation']} inside the incremental "
                     f"range ({from_version}, {to_v}]: appends-between "
                     f"undefined when rows were rewritten or removed")
-            dirs.append(os.path.join(self.data_dir, m["data_dir"]))
+            scans.append(_scan(spark, *self._entry_paths(m)[0]))
             v = m.get("parent")
         if v != from_version:
             raise ValueError(
                 f"v{from_version} is not an ancestor of v{to_v}")
-        out = spark.read.parquet(dirs[-1])
-        for d in reversed(dirs[:-1]):
-            out = out.unionByName(spark.read.parquet(d), allowMissingColumns=True)
-        return out
+        return _union(scans[::-1])
 
     # -- maintenance --------------------------------------------------------
     def rollback(self, version: int) -> None:
@@ -500,6 +460,115 @@ def _json_safe(v):
         return v
     except TypeError:
         return str(v)
+
+
+def _write(df: DataFrame, path: str, partition_cols: Sequence[str] = ()):
+    writer = df.write.mode("overwrite")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(path)
+
+
+def _scan(spark: SparkSession, path: str, schema: dict | None) -> DataFrame:
+    """One written dir, read with its recorded schema (no inference job;
+    partition columns keep their declared types).  Without a recorded
+    schema it falls back to inference."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(path)
+
+
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                  dfs)
+
+
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _partition_value(raw: str, dtype):
+    """A `col=value` directory value as the JSON value of its declared
+    type; dates, timestamps and decimals stay text, as `_json_safe`
+    renders them."""
+    if raw == _HIVE_NULL:
+        return None
+    if dtype in ("byte", "short", "integer", "long"):
+        return int(raw)
+    if dtype in ("float", "double"):
+        return float(raw)
+    if dtype == "boolean":
+        return raw == "true"
+    return raw
+
+
+def _spark_order(v):
+    """Sort key matching Spark's min/max: NaN above every number."""
+    return (v != v, v)
+
+
+def _chunk_bounds(md, col: str):
+    """(min, max) per row group of one Parquet footer for `col`, skipping
+    all-NULL chunks; None for a chunk whose footer holds no bounds."""
+    idx = [i for i in range(md.num_columns) if md.schema.column(i).path == col]
+    for g in range(md.num_row_groups):
+        chunk = md.row_group(g).column(idx[0]) if idx else None
+        st = chunk.statistics if chunk is not None else None
+        if st is not None and st.has_null_count \
+                and st.null_count == chunk.num_values:
+            continue
+        yield (st.min, st.max) if st is not None and st.has_min_max else None
+
+
+def _footer_partitions(out_dir: str, schema: dict,
+                       partition_cols: Sequence[str],
+                       metrics_cols: Sequence[str]) -> list[dict]:
+    """Manifest `partitions` of a written dir from its Parquet footers:
+    per partition dir (values parsed from `col=value` names, typed by
+    the written schema) the row count and each metric's min/max, merged
+    over every non-empty file's row groups."""
+    types = {f["name"]: f["type"] for f in schema["fields"]}
+    missing = [c for c in metrics_cols if c not in types]
+    if missing:
+        raise ValueError(f"metrics columns {missing} not in the written data")
+    parts: dict[str, dict] = {}
+    for root, dirs, files in os.walk(out_dir):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in files:
+            if name.startswith(("_", ".")) or not name.endswith(".parquet"):
+                continue
+            md = pq.read_metadata(os.path.join(root, name))
+            if md.num_rows == 0:
+                continue
+            rel = os.path.relpath(root, out_dir)
+            p = parts.get(rel)
+            if p is None:
+                raw = dict(x.split("=", 1) for x in rel.split(os.sep)) \
+                    if rel != "." else {}
+                values = {unquote(k): unquote(v) for k, v in raw.items()}
+                p = parts[rel] = {
+                    "values": {c: _partition_value(values[c], types[c])
+                               for c in partition_cols},
+                    "rows": 0, "bounds": {c: [] for c in metrics_cols}}
+            p["rows"] += md.num_rows
+            for c in metrics_cols:
+                p["bounds"][c] += _chunk_bounds(md, c)
+    out = []
+    for rel in sorted(parts):
+        p = parts[rel]
+        metrics = {}
+        for c, chunks in p["bounds"].items():
+            if not chunks or None in chunks:
+                metrics[c] = {"min": None, "max": None}
+            else:
+                metrics[c] = {
+                    "min": _json_safe(min((b[0] for b in chunks),
+                                          key=_spark_order)),
+                    "max": _json_safe(max((b[1] for b in chunks),
+                                          key=_spark_order))}
+        out.append({"values": p["values"], "row_count": p["rows"],
+                    "metrics": metrics})
+    return out
 
 
 def run_resumable(table: SnapshotTable, steps: list[tuple[str, callable]],

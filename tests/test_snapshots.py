@@ -1,12 +1,15 @@
 """Snapshot table layer: atomic commits, per-partition lineage+metrics,
 append/overwrite chains, time travel, and pipeline resume."""
 
+import datetime
 import json
 import os
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from data_cube_utilities_spark.sources.snapshots import SnapshotTable, run_resumable
 
@@ -309,3 +312,182 @@ def test_refresh_incremental_agg_equals_full_recompute(spark, tmp_path):
     src.delete_where(spark, "v = 3", key_cols=["k", "v"])
     with pytest.raises(ValueError):
         refresh_incremental_agg(src, agg, spark, ["k"], ["v"])
+
+
+# -- planning from manifests: recorded schema, footer metrics, job counts ---
+
+def _jobs(spark, call):
+    """(call(), number of Spark jobs the call ran)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    sc.setJobGroup("snapshots-jobs", "count jobs", False)
+    try:
+        bus.waitUntilEmpty()
+        before = set(sc.statusTracker().getJobIdsForGroup("snapshots-jobs"))
+        out = call()
+        bus.waitUntilEmpty()
+        after = set(sc.statusTracker().getJobIdsForGroup("snapshots-jobs"))
+    finally:
+        sc.setJobGroup(None, None, False)
+    return out, len(after - before)
+
+
+def _aggregate_partitions(spark, table, version, partition_cols, metrics_cols):
+    """Reference: the per-partition stats as ONE grouped aggregate over the
+    written data (how commits computed them before footers did), read
+    with the recorded schema."""
+    from data_cube_utilities_spark.sources.snapshots import _json_safe
+
+    m = table.manifest(version)
+    written = spark.read.schema(StructType.fromJson(m["schema"])) \
+        .parquet(os.path.join(table.data_dir, m["data_dir"]))
+    aggs = [F.count("*").alias("__rows")]
+    for c in metrics_cols:
+        aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
+    stats = (written.groupBy(*partition_cols) if partition_cols
+             else written).agg(*aggs).collect()
+    return [{"values": {c: _json_safe(r[c]) for c in partition_cols},
+             "row_count": r["__rows"],
+             "metrics": {c: {"min": _json_safe(r[f"__min_{c}"]),
+                             "max": _json_safe(r[f"__max_{c}"])}
+                         for c in metrics_cols}} for r in stats]
+
+
+def _canon(partitions):
+    return sorted(json.dumps(p, sort_keys=True) for p in partitions)
+
+
+def test_partition_columns_keep_declared_types(spark, table):
+    df = spark.createDataFrame(
+        [("007", 1, 1.0), ("010", 2, 2.0), ("010", 3, 3.0)],
+        "code string, big long, v double")
+    table.commit(df, ["code", "big"], metrics_cols=["v"])
+    back = table.read(spark)
+    types = dict(back.dtypes)
+    assert types["code"] == "string" and types["big"] == "bigint"
+    assert sorted((r["code"], r["big"]) for r in back.collect()) == [
+        ("007", 1), ("010", 2), ("010", 3)]
+    parts = table.manifest()["partitions"]
+    assert sorted(p["values"]["code"] for p in parts) == ["007", "010", "010"]
+
+
+def test_footer_metrics_equal_grouped_aggregate(spark, table):
+    rng = np.random.default_rng(20261018)
+    strs = ["007", "010", "a/b c:d", None]
+    days = [datetime.date(2020, 1, 1), datetime.date(2021, 6, 30)]
+    rows = []
+    for i in range(600):
+        s = strs[rng.integers(4)]
+        rows.append((
+            int(rng.integers(3)), 10**10 + int(rng.integers(2)), s,
+            days[rng.integers(2)],
+            None if rng.random() < 0.1 else int(rng.integers(-10**12, 10**12)),
+            # all NULL in every "010" partition
+            None if s == "010" else float(rng.normal()) * 1e3,
+            f"s{int(rng.integers(10**6)):06d}",
+            days[0] + datetime.timedelta(days=int(rng.integers(3650)))))
+    df = spark.createDataFrame(
+        rows, "p_int int, p_long long, p_str string, p_date date, "
+              "m_long long, m_dbl double, m_str string, m_date date")
+    metrics = ["m_long", "m_dbl", "m_str", "m_date"]
+    for k, pcols in enumerate([["p_int", "p_str"], ["p_long", "p_date"], [],
+                               ["p_str"]]):
+        # several tasks write into every partition: several files each
+        v = table.commit(df.repartition(3), pcols, metrics_cols=metrics,
+                         operation="append" if k else "overwrite")
+        m = table.manifest(v)
+        ref = _aggregate_partitions(spark, table, v, pcols, metrics)
+        assert _canon(m["partitions"]) == _canon(ref), pcols
+        assert m["total_rows"] == 600
+    nulls = [p for p in table.manifest()["partitions"]
+             if p["values"]["p_str"] == "010"]
+    assert nulls and nulls[0]["metrics"]["m_dbl"] == {"min": None, "max": None}
+    assert {p["values"]["p_str"] for p in table.manifest()["partitions"]} \
+        == {"007", "010", "a/b c:d", None}
+    # a zero-row commit records no partitions, and the chain still reads
+    v = table.commit(df.limit(0), ["p_int"], metrics_cols=metrics,
+                     operation="append")
+    assert table.manifest(v)["partitions"] == []
+    assert table.manifest(v)["total_rows"] == 0
+    assert table.read(spark).count() == 4 * 600
+
+
+def test_nan_metric_rows_under_where_identical(spark, table):
+    rng = np.random.default_rng(11)
+    for k in range(4):
+        vals = [float(x) for x in rng.uniform(10 * k, 10 * k + 9, 40)]
+        if k % 2:
+            vals[::7] = [float("nan")] * len(vals[::7])
+        pdf = pd.DataFrame({"id": range(40 * k, 40 * k + 40), "x": vals,
+                            "part": [i % 3 for i in range(40)]})
+        table.commit(spark.createDataFrame(pdf).repartition(2), ["part"],
+                     metrics_cols=["x"],
+                     operation="append" if k else "overwrite")
+    full = table.read(spark)
+    for lo, hi in [(12.0, 15.0), (0.0, 9.0), (25.0, 45.0), (float("nan"),) * 2,
+                   (5.0, float("nan")), (-1.0, float("inf"))]:
+        got = sorted(map(repr, table.read(spark, where={"x": (lo, hi)})
+                         .collect()))
+        want = sorted(map(repr, SnapshotTable._apply_where(
+            full, {"x": (lo, hi)}).collect()))
+        assert got == want, (lo, hi)
+    assert len(table.pruned_dirs(3, {"x": (12.0, 15.0)})) == 1
+
+
+def test_commit_of_partitioned_frame_runs_one_job(spark, table):
+    df = spark.range(0, 1000, 1, 4).select(
+        "id", (F.col("id") % 5).alias("part"), (F.col("id") * 0.5).alias("v"))
+    v, n = _jobs(spark, lambda: table.commit(df, ["part"], metrics_cols=["v"]))
+    assert n == 1
+    assert table.manifest(v)["total_rows"] == 1000
+
+
+def test_read_plans_without_jobs(spark, table):
+    table.commit(_df(spark, 0, 10, "a"), ["part"], metrics_cols=["v"])
+    table.commit(_df(spark, 10, 20, "b"), ["part"], operation="append",
+                 metrics_cols=["v"])
+    table.delete_where(spark, "id % 4 = 0", key_cols=["id"])
+    table.merge_upsert(_df(spark, 15, 25, "m"), key_cols=["id"])
+    out, n = _jobs(spark, lambda: table.read(spark))
+    assert n == 0
+    _, n = _jobs(spark, lambda: table.read(spark, where={"v": (3.0, 12.0)}))
+    assert n == 0
+    want = [i for i in range(15) if i % 4] + list(range(15, 25))
+    assert sorted(r["id"] for r in out.collect()) == want
+
+
+def test_merge_upsert_evaluates_source_once(spark, table):
+    table.commit(_df(spark, 0, 10, "a"), operation="overwrite")
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tick(i):
+        evaluated.add(1)
+        return i
+
+    src = spark.range(5, 25, 1, 2).select(tick("id").alias("id"),
+                                          F.lit("m").alias("part"),
+                                          (F.col("id") * 10.0).alias("v"))
+    table.merge_upsert(src, key_cols=["id"])
+    assert evaluated.value == 20
+    rows = {r["id"]: r["part"] for r in table.read(spark).collect()}
+    assert rows == {**{i: "a" for i in range(5)},
+                    **{i: "m" for i in range(5, 25)}}
+
+
+def test_manifest_without_schema_still_reads(spark, table):
+    table.commit(_df(spark, 0, 10, "a"), ["part"], metrics_cols=["v"])
+    table.commit(_df(spark, 10, 20, "b"), ["part"], operation="append")
+    table.delete_where(spark, "id = 3", key_cols=["id"])
+    table.merge_upsert(_df(spark, 18, 22, "m"), key_cols=["id"])
+    want = sorted(tuple(r) for r in table.read(spark).collect())
+    for v in table.all_versions():
+        path = table._manifest_path(v)
+        with open(path) as f:
+            m = json.load(f)
+        m.pop("schema"), m.pop("delete_schema", None)
+        with open(path, "w") as f:
+            json.dump(m, f)
+    assert sorted(tuple(r) for r in table.read(spark).collect()) == want
+    assert sorted(r["id"] for r in table.read_changes(spark, 0, 1)
+                  .collect()) == list(range(10, 20))
