@@ -206,9 +206,10 @@ class SnapshotTable:
         inserts = os.path.join(out_dir, "inserts")
         _write(source, inserts, partition_cols)
         # the keyset comes from the inserts just written, so the source
-        # plan is evaluated once
+        # plan is evaluated once; a key the source repeats is written
+        # repeatedly — read() collapses delete keys with max(__dver)
         keys = _scan(source.sparkSession, inserts, source.schema.jsonValue()) \
-            .select(*key_cols).distinct()
+            .select(*key_cols)
         _write(keys, os.path.join(out_dir, "deletes"))
         return self._record(version, parent, "merge", inserts, source.schema,
                             partition_cols, metrics_cols,

@@ -28,6 +28,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..operators.textops import hash_bands
+
 OUT_SCHEMA = "cell_id long, n_buckets int, n_obs long"
 STATE_SCHEMA = "bitmap long, n_obs long"
 
@@ -176,17 +178,15 @@ def _phash_gate(key, pdfs, state):
 
 def _banded(df: DataFrame, id_col: str, phash_col: str) -> DataFrame:
     """(member_id, phash, band, key): the PHGATE_BANDS x 16-bit band keys
-    of the 64-bit hash, JVM-side (same banding as hash_near_dup_pairs)."""
+    of the 64-bit hash, JVM-side (textops.hash_bands, the banding of
+    hash_near_dup_pairs)."""
     from pyspark.sql import functions as F
 
-    width = 64 // PHGATE_BANDS
-    mask = (1 << width) - 1
     h = F.col(phash_col).cast("long")
-    keys = [F.shiftrightunsigned(h, i * width).bitwiseAND(F.lit(mask))
-            .cast("long") for i in range(PHGATE_BANDS)]
     return df.select(F.col(id_col).cast("string").alias("member_id"),
                      h.alias("phash"),
-                     F.posexplode(F.array(*keys)).alias("band", "key"))
+                     F.posexplode(F.array(*hash_bands(h, PHGATE_BANDS)))
+                      .alias("band", "key"))
 
 
 def streaming_phash_near_dup(stream: DataFrame,

@@ -475,6 +475,33 @@ def test_merge_upsert_evaluates_source_once(spark, table):
                     **{i: "m" for i in range(5, 25)}}
 
 
+def test_merge_upsert_runs_two_jobs(spark, table):
+    """A merge writes the inserts (1 job) and the keyset read back from
+    them (1 job): no distinct shuffle — read() collapses repeated delete
+    keys itself."""
+    table.commit(_df(spark, 0, 10, "a"), operation="overwrite")
+    _, n = _jobs(spark, lambda: table.merge_upsert(
+        _df(spark, 5, 12, "m"), key_cols=["id"]))
+    assert n == 2
+
+
+def test_merge_upsert_with_repeated_source_keys(spark, table):
+    """A source that repeats a key: every source row is inserted, every
+    older row with that key is dropped, and a later merge of the same
+    key replaces both inserted rows."""
+    table.commit(_df(spark, 0, 6, "a"), operation="overwrite")
+    src = _df(spark, 3, 8, "m").union(_df(spark, 4, 6, "n"))
+    table.merge_upsert(src, key_cols=["id"])
+    got = sorted(tuple(r) for r in table.read(spark).collect())
+    want = sorted([(i, "a", float(i)) for i in range(3)]
+                  + [(i, "m", float(i)) for i in range(3, 8)]
+                  + [(i, "n", float(i)) for i in range(4, 6)])
+    assert got == want
+    table.merge_upsert(_df(spark, 5, 6, "z"), key_cols=["id"])
+    got = sorted(tuple(r) for r in table.read(spark).collect())
+    assert got == sorted([w for w in want if w[0] != 5] + [(5, "z", 5.0)])
+
+
 def test_manifest_without_schema_still_reads(spark, table):
     table.commit(_df(spark, 0, 10, "a"), ["part"], metrics_cols=["v"])
     table.commit(_df(spark, 10, 20, "b"), ["part"], operation="append")

@@ -167,6 +167,105 @@ def test_simhash_near_dup_pairs(spark):
         assert pairs[(0, 2)] <= 3
 
 
+def test_simhash_rejects_unreachable_threshold(spark):
+    """Four 16-bit bands are pigeonhole-exact only up to hamming 3; a
+    larger threshold would silently return an incomplete pair set."""
+    df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError):
+        textops.simhash_near_dup_pairs(df, max_hamming=4)
+
+
+def test_simhash_near_dup_pairs_brute_parity(spark):
+    """Every pair of signatures within popcount(XOR) <= 3 over both
+    32-bit halves, and no other — including signatures whose simhash_hi
+    has bit 31 set (the packed 64-bit hash is then negative)."""
+    rng = np.random.RandomState(31)
+    vocab = [f"w{i}" for i in range(400)]
+    docs = []
+    for base in range(12):
+        words = list(rng.choice(vocab, size=40))
+        docs.append((len(docs), " ".join(words)))
+        for _ in range(3):          # variants: swap one or two tokens
+            v = list(words)
+            for _ in range(int(rng.randint(1, 3))):
+                v[int(rng.randint(0, len(v)))] = str(rng.choice(vocab))
+            docs.append((len(docs), " ".join(v)))
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    sig = {r.doc_id: (r.simhash_hi << 32) | r.simhash_lo
+           for r in textops.simhash(df).collect()}
+    exp = set()
+    for i in sig:
+        for j in sig:
+            h = bin(sig[i] ^ sig[j]).count("1")
+            if i < j and h <= 3:
+                exp.add((i, j, h))
+    got = {(r.doc_a, r.doc_b, r.hamming)
+           for r in textops.simhash_near_dup_pairs(df).collect()}
+    assert got == exp
+    # the fixture covers near-dup pairs that are not exact duplicates and
+    # signatures with the sign bit of the packed long set
+    assert any(h > 0 for _, _, h in exp)
+    assert any(v >> 63 for v in sig.values())
+
+
+def _enumerate_band_pairs(rows, carry):
+    """Pure-Python reference of _band_pairs over (id, band, key, *carry)."""
+    out = {}
+    for r in rows:
+        for s in rows:
+            if r[1:3] == s[1:3] and r[0] < s[0]:
+                k = (r[0], *r[3:3 + carry], s[0], *s[3:3 + carry])
+                out[k] = out.get(k, 0) + 1
+    return out
+
+
+def _enumerate_band_probe(rows, query_ids, flips):
+    """Pure-Python reference of _band_probe over (vec_id, band, key)."""
+    out = {}
+    for q, qband, qkey in rows:
+        if q not in query_ids:
+            continue
+        for p in [qkey] + [qkey ^ (1 << j) for j in range(flips)]:
+            for v, band, key in rows:
+                if band == qband and key == p and v != q:
+                    out[(q, v)] = out.get((q, v), 0) + 1
+    return out
+
+
+def test_band_join_helpers_match_enumeration(spark):
+    """Seeded random signature tables with heavily repeated keys and ids
+    in arbitrary order: the self-join (with and without carried columns)
+    and the broadcast probe (with and without one-bit flips, including
+    an empty probe and a query id absent from the table) equal a
+    pure-Python enumeration, n_bands_shared included."""
+    rng = np.random.RandomState(11)
+    for trial in range(3):
+        ids = [int(i) for i in rng.permutation(60)[:int(rng.randint(8, 25))]]
+        rows = [(i, b, int(rng.randint(0, 6)), int(i) * 7 - 3)
+                for i in ids for b in range(3)]
+        rng.shuffle(rows)
+        sig = spark.createDataFrame(
+            rows, "vec_id long, band int, key long, h long")
+
+        got = {tuple(r[:-1]): r[-1] for r in textops._band_pairs(
+            sig.drop("h"), "vec_id", "a", "b").collect()}
+        assert got == _enumerate_band_pairs(rows, 0)
+        pairs = textops._band_pairs(sig, "vec_id", "a", "b", carry=("h",))
+        assert pairs.columns == ["a", "h_a", "b", "h_b", "n_bands_shared"]
+        got = {tuple(r[:-1]): r[-1] for r in pairs.collect()}
+        assert got == _enumerate_band_pairs(rows, 1) and got
+
+        plain = [r[:3] for r in rows]
+        queries = [ids[0], ids[-1], 999]
+        for qids, flips in [(queries, 0), (queries, 3), ([], 0), ([], 2)]:
+            probe = textops._band_probe(sig.drop("h"), qids, flips)
+            assert probe.columns == ["query_id", "vec_id", "n_bands_shared"]
+            got = {(r.query_id, r.vec_id): r.n_bands_shared
+                   for r in probe.collect()}
+            assert got == _enumerate_band_probe(plain, qids, flips)
+            assert bool(got) == bool(qids)
+
+
 def test_batch_ann_multiprobe_recall_superset(spark):
     """probe_bits=1 candidates are a superset of single-probe (same bucket
     plus one-flip buckets), so each query's top-k cosine at rank r is >=
