@@ -851,7 +851,6 @@ def _border_runs(axis_vals: np.ndarray, labs_line: np.ndarray):
 
 def vectorize_regions_global(planes: DataFrame, threshold: float = 0.5,
                              tile_w: int = 64, tile_h: int = 64,
-                             dense_ids: bool = False,
                              seam_merge: str = "auto",
                              driver_merge_max_pairs: int = 1_000_000) -> DataFrame:
     """xr_vectorize with CROSS-TILE region merge (SURVEY.md 2.3 promise;
@@ -881,10 +880,8 @@ def vectorize_regions_global(planes: DataFrame, threshold: float = 0.5,
     Stage 4: re-aggregate stats with one groupBy — counts/bboxes/
     centroids merge exactly (sums, min/max).
 
-    Output: region_id (deterministic — default: the root tile/label packed
-    into one int64, shuffle-free; dense_ids=True gives contiguous ranks via
-    a partition-less window, small result sets only), n_px, bbox, exact
-    centroid.
+    Output: region_id (deterministic: the root tile/label packed into one
+    int64, shuffle-free), n_px, bbox, exact centroid.
     """
     tag_schema = ("kind string, tx long, ty long, region long, n_px long, "
                   "min_x long, min_y long, max_x long, max_y long, "
@@ -1039,17 +1036,10 @@ def vectorize_regions_global(planes: DataFrame, threshold: float = 0.5,
                    F.min("min_x").alias("min_x"), F.min("min_y").alias("min_y"),
                    F.max("max_x").alias("max_x"), F.max("max_y").alias("max_y"),
                    F.sum("sum_x").alias("sum_x"), F.sum("sum_y").alias("sum_y")))
-    if dense_ids:
-        # cosmetic contiguous ids: a partition-less rank — only for result
-        # sets small enough to inspect (the default composite key below is
-        # the scale path; a global window funnels all regions to one task)
-        w = Window.orderBy("rty", "rtx", "rreg")
-        rid = F.row_number().over(w).cast("long")
-    else:
-        # deterministic, shuffle-free id: the root (tile, label) packed
-        # into one int64 (20 bits each — 1M tiles per axis, 1M labels/tile)
-        rid = ((F.col("rty") * F.lit(1 << 40))
-               + (F.col("rtx") * F.lit(1 << 20)) + F.col("rreg"))
+    # deterministic, shuffle-free id: the root (tile, label) packed into
+    # one int64 (20 bits each — 1M tiles per axis, 1M labels/tile)
+    rid = ((F.col("rty") * F.lit(1 << 40))
+           + (F.col("rtx") * F.lit(1 << 20)) + F.col("rreg"))
     return (merged
             .withColumn("region_id", rid)
             .select("region_id", "n_px", "min_x", "min_y", "max_x", "max_y",

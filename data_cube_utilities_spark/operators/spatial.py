@@ -281,13 +281,12 @@ def edges_rows(polys: dict[int, list[tuple[float, float]]]) -> list[tuple]:
 
 def zonal_stats(points: DataFrame, polygons, value_col: str,
                 x_col: str = "x", y_col: str = "y",
-                stats: Sequence[str] = ("count", "min", "max", "mean", "sum", "median"),
-                strategy: str = "broadcast", res: int = 7) -> DataFrame:
-    """PIP join then per-zone aggregate. Partial aggregation (map-side
-    combine) replaces the reference's multiprocessing shared-dict merge."""
-    joined = (pip_broadcast(points, polygons, x_col, y_col)
-              if strategy == "broadcast"
-              else pip_cell_join(points, polygons, res, x_col, y_col))
+                stats: Sequence[str] = ("count", "min", "max", "mean",
+                                        "sum", "median")) -> DataFrame:
+    """Broadcast PIP join then per-zone aggregate. Partial aggregation
+    (map-side combine) replaces the reference's multiprocessing
+    shared-dict merge."""
+    joined = pip_broadcast(points, polygons, x_col, y_col)
     agg_map = {
         "count": F.count(value_col).alias("count"),
         "min": F.min(value_col).alias("min"),

@@ -31,8 +31,12 @@ Design notes per operator:
 Cache lifecycle (operators/fixpoint.py): an operator whose branches share
 a signature/token table materializes it with `materialized` and returns
 its checkpointed result, so the table is released before the operator
-returns, also when the result job fails (the kNN pattern; the
-lsh_ann_topk* probes).  The banded near-dup pair operators (minhash,
+returns, also when the result job fails (the kNN pattern;
+lsh_ann_topk_batch).  Each ANN index (banded sign-LSH, IVF, PQ-ADC) has
+one probe, its *_topk_batch operator: a single query is a one-id batch,
+and the per-query top-k is one `row_number() <= k` window partitioned by
+query id, which plans as a map-side partial WindowGroupLimit below its
+exchange.  The banded near-dup pair operators (minhash,
 simhash, 64-bit hash, embedding) all run through `_band_pairs`: it
 checkpoints the SMALL (id, band, key) table and returns the (big) pair
 join lazily.
@@ -633,6 +637,16 @@ def cosine_topk(emb: DataFrame, query_id: int, k: int = 10,
                         k, "vec_id", "cosine")
 
 
+def _per_query_topk(scored: DataFrame, k: int, score: Column) -> DataFrame:
+    """The ANN probes' one top-k shape: rank <= k per query_id under the
+    (score, vec_id) total order.  The `row_number() <= k` filter plans as
+    a map-side partial WindowGroupLimit below the query_id exchange, so
+    each partition ships at most k rows per query before the final rank."""
+    w = Window.partitionBy("query_id").orderBy(score, F.col("vec_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+                  .filter(F.col("rank") <= k))
+
+
 def _ranked_topk(scored: DataFrame, k: int, *out_cols: str) -> DataFrame:
     """Distributed top-k: orderBy().limit(k) plans as TakeOrderedAndProject
     (per-partition partial top-k, no single-task global sort — a global
@@ -877,78 +891,65 @@ def _ivf_lists(e: DataFrame, dims: int, n_lists: int,
                                 .select("vec_id", "list_id"))
 
 
+def _query_vectors(df: DataFrame, query_ids: "Sequence[int]",
+                   id_col: str = "vec_id",
+                   vec_col: str = "v") -> "dict[int, np.ndarray]":
+    """{id: float64 vector} of the query ids present in df (one bounded
+    driver collect).  Absent ids, and ids whose vector is NULL (not
+    candidates either), are skipped, but an entirely unresolvable request
+    dies HERE with a clear message, not as an opaque error further down
+    (empty probe table, np.stack, a 0-d LUT)."""
+    rows = {int(r[0]): np.asarray(r[1], dtype=np.float64)
+            for r in df.filter(F.col(id_col).isin([int(i) for i in query_ids])
+                               & F.col(vec_col).isNotNull())
+                       .select(id_col, F.col(vec_col).cast("array<double>"))
+                       .collect()}
+    if not rows:
+        raise ValueError(
+            f"none of query_ids {list(query_ids)!r} present in {id_col}")
+    return rows
+
+
 def ivf_ann_topk_batch(emb: DataFrame, query_ids: "Sequence[int]",
                        dims: int, k: int = 5,
                        n_lists: int = 8, n_probe: int = 2,
                        id_col: str = "vec_id", vec_col: str = "embedding",
                        seed: int = 42) -> DataFrame:
-    """Batch IVF ANN: one index build (materialized (vec_id, list_id) —
-    at 100 TB list_id is a partition column written once), then ALL
-    queries probe their n_probe nearest lists in a single equi-join; the
-    per-query top-k is a window rank partitioned by query id. The probe
-    table (n_queries x n_probe rows + query vectors) broadcasts, so a
-    query touches only its probed partitions — never the full table."""
+    """IVF ANN: coarse-quantize vectors to their nearest k-means centroid
+    (mlops.kmeans_fit on a sample; assignment is pure codegen), then exact
+    cosine only within each query's n_probe nearest lists — the classic
+    inverted-file index as an equi-join on list id.  One index build
+    (materialized (vec_id, list_id) — at 100 TB list_id is a partition
+    column written once), then ALL queries probe in a single equi-join;
+    the per-query top-k is a window rank partitioned by query id. The
+    probe table (n_queries x n_probe rows + query vectors) broadcasts, so
+    a query touches only its probed partitions — never the full table.
+    Output: (query_id, vec_id, list_id, cosine, rank<=k).
+
+    Ids absent from the table are skipped; if none is present the call
+    raises ValueError (the pq_adc_topk_batch contract)."""
     e = emb.select(F.col(id_col).alias("vec_id"),
                    F.col(vec_col).cast("array<double>").alias("v"))
     centers, listed = _ivf_lists(e, dims, n_lists, seed)
     e = e.join(listed, "vec_id")
 
-    ids = [int(i) for i in query_ids]
-    qvecs = {int(r["vec_id"]): np.asarray(r["v"], dtype=np.float64)
-             for r in e.filter(F.col("vec_id").isin(ids))
-                       .select("vec_id", "v").collect()}
+    qvecs = _query_vectors(e, query_ids)
     spark = emb.sparkSession
     probe_rows = []
-    for qid in ids:
-        if qid not in qvecs:
-            continue
-        d2 = ((centers - qvecs[qid][None, :]) ** 2).sum(axis=1)
+    for qid, qv in qvecs.items():
+        d2 = ((centers - qv[None, :]) ** 2).sum(axis=1)
         for li in np.argsort(d2)[:n_probe]:
-            probe_rows.append((qid, int(li), [float(x) for x in qvecs[qid]]))
+            probe_rows.append((qid, int(li), [float(x) for x in qv]))
     probes = spark.createDataFrame(
         probe_rows, "query_id long, list_id int, qv array<double>")
 
     j = (e.join(F.broadcast(probes), "list_id")
           .filter(F.col("vec_id") != F.col("query_id")))
     cos = _cosine_col(F.col("v"), F.col("qv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc())
-    return (j.withColumn("cosine", F.round(cos, 6))
-             .select("query_id", "vec_id", "list_id", "cosine")
-             .withColumn("rank", F.row_number().over(w))
-             .filter(F.col("rank") <= k))
-
-
-def ivf_ann_topk(emb: DataFrame, query_id: int, dims: int, k: int = 5,
-                 n_lists: int = 8, n_probe: int = 2,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 seed: int = 42) -> DataFrame:
-    """IVF-style ANN: coarse-quantize vectors to their nearest k-means
-    centroid (mlops.kmeans_fit on a sample; assignment is pure codegen),
-    then exact cosine only within the query's n_probe nearest lists —
-    the classic inverted-file index as an equi-join on list id.
-
-    At 100TB the list id becomes a partition column: a query touches
-    n_probe partitions instead of the full table.
-    """
-    e = emb.select(F.col(id_col).alias("vec_id"),
-                   F.col(vec_col).cast("array<double>").alias("v"))
-    centers, listed = _ivf_lists(e, dims, n_lists, seed)
-    e = e.join(listed, "vec_id")
-
-    # query's n_probe nearest lists (driver-side: centers are tiny)
-    qrow = e.filter(F.col("vec_id") == query_id).select("v").first()
-    qv = np.asarray(qrow["v"], dtype=np.float64)
-    d2 = ((centers - qv[None, :]) ** 2).sum(axis=1)
-    probe = [int(i) for i in np.argsort(d2)[:n_probe]]
-
-    cand = e.filter(F.col("list_id").isin(probe) &
-                    (F.col("vec_id") != query_id))
-    q = e.filter(F.col("vec_id") == query_id).select(F.col("v").alias("qv"))
-    j = cand.crossJoin(F.broadcast(q))
-    cos = _cosine_col(F.col("v"), F.col("qv"))
-    return _ranked_topk(j.withColumn("cosine", F.round(cos, 6)),
-                        k, "vec_id", "list_id", "cosine")
+    return _per_query_topk(
+        j.withColumn("cosine", F.round(cos, 6))
+         .select("query_id", "vec_id", "list_id", "cosine"),
+        k, F.col("cosine").desc())
 
 
 def lsh_ann_topk_batch(emb: DataFrame, query_ids: "Sequence[int]",
@@ -970,7 +971,12 @@ def lsh_ann_topk_batch(emb: DataFrame, query_ids: "Sequence[int]",
     homes of a near-neighbor straddling a hyperplane), trading
     N_BANDS_LSH * (PLANES_PER_BAND + 1) broadcast rows per query for
     recall — still an equi-join, never all-pairs.
-    Output: (query_id, vec_id, cosine, rank<=k).
+    Output: (query_id, vec_id, n_bands_shared, cosine, rank<=k);
+    n_bands_shared counts the probed (band, key) rows a candidate matched.
+
+    Ids absent from the table simply return no rows (an all-absent
+    request gives an empty result, not an error): the query block never
+    reaches the driver, and checking it would cost one more Spark job.
 
     The k x |queries| result is checkpointed and the signature table
     released before returning (kNN lifecycle).
@@ -984,46 +990,16 @@ def lsh_ann_topk_batch(emb: DataFrame, query_ids: "Sequence[int]",
     qv = (e.filter(F.col("vec_id").isin(ids))
            .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv")))
     cos = _cosine_col(F.col("v"), F.col("qv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc())
     # no repartition("band", "key") here: the probe broadcasts the query
     # block, so sig's partitioning is irrelevant
     with materialized(_banded_signatures(e, dims, bands, planes)
                       .drop("v")) as sig:
         cand = _band_probe(sig, ids, planes if probe_bits else 0)
         j = cand.join(e, "vec_id").join(F.broadcast(qv), "query_id")
-        return checkpoint(j.withColumn("cosine", F.round(cos, 6))
-                           .select("query_id", "vec_id", "cosine")
-                           .withColumn("rank", F.row_number().over(w))
-                           .filter(F.col("rank") <= k))
-
-
-def lsh_ann_topk(emb: DataFrame, query_id: int, dims: int, k: int = 5,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 bands: int = N_BANDS_LSH,
-                 planes: int | None = None,
-                 n_rows: int | None = None) -> DataFrame:
-    """ANN: restrict the exact cosine scan to vectors sharing >=1 banded
-    sign-LSH key with the query — the scale path ((band, key) equi-join
-    instead of full cross join; candidates bounded by band-bucket mass).
-    Output: (vec_id, n_bands_shared, cosine, rank).
-
-    planes=None auto-sizes the band width from the corpus row count.
-    The k-row result is checkpointed and the signature table released
-    before returning — same lifecycle as every sibling operator."""
-    e = emb.select(F.col(id_col).alias("vec_id"),
-                   F.col(vec_col).cast("array<double>").alias("v"))
-    planes = _resolve_planes(e, planes, n_rows)
-    qv = (e.filter(F.col("vec_id") == query_id)
-           .select(F.col("v").alias("qv")))
-    cos = _cosine_col(F.col("v"), F.col("qv"))
-    with materialized(_banded_signatures(e, dims, bands, planes)
-                      .drop("v")) as sig:
-        cand = _band_probe(sig, [query_id]).drop("query_id")
-        j = cand.join(e, "vec_id").crossJoin(F.broadcast(qv))
-        return checkpoint(_ranked_topk(
-            j.withColumn("cosine", F.round(cos, 6)),
-            k, "vec_id", "n_bands_shared", "cosine"))
+        return checkpoint(_per_query_topk(
+            j.withColumn("cosine", F.round(cos, 6))
+             .select("query_id", "vec_id", "n_bands_shared", "cosine"),
+            k, F.col("cosine").desc()))
 
 
 # ---------------------------------------------------------------------------
@@ -1207,47 +1183,6 @@ def _adc_score_udf(lut: "np.ndarray"):
     return adc
 
 
-def pq_adc_topk(emb: DataFrame, query_id: int, dims: int,
-                codebook: "np.ndarray" = None, k: int = 10,
-                m: int = 8, ksub: int = 16,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                codes: DataFrame = None) -> DataFrame:
-    """PQ asymmetric-distance top-k: score every row as
-    sum_s LUT[s][code_s] where LUT[s][c] = ||q_s - centroid_{s,c}||^2 —
-    the query is never quantized, only the corpus is.  The scan touches
-    ONLY the codes table (m small ints per row) plus an m x ksub LUT
-    shipped in the UDF closure; TakeOrderedAndProject keeps the top-k
-    without a global sort.  codebook=None uses the deterministic
-    first-rows codebook (SQL-oracle-able); pass pq_codebook_train output
-    and a precomputed `codes` table for the production path.
-
-    Reference shape: ANN memory path of the dedup/similarity family
-    (SURVEY §2 training-data ops); PQ follows Jegou, Douze, Schmid,
-    "Product Quantization for Nearest Neighbor Search", TPAMI 2011.
-    """
-    if codebook is None:
-        codebook = pq_codebook_first_rows(emb, dims, m=m, ksub=ksub,
-                                          id_col=id_col, vec_col=vec_col)
-    CB = np.ascontiguousarray(codebook)
-    if codes is None:
-        codes = pq_encode(emb, CB, id_col=id_col, vec_col=vec_col)
-
-    qrow = (emb.filter(F.col(id_col) == query_id)
-               .select(F.col(vec_col).cast("array<double>")).first())
-    qv = np.asarray(qrow[0], dtype=np.float64)
-    adc = _adc_score_udf(_adc_lut(qv, CB))
-    scored = (codes.filter((F.col("vec_id") != query_id)
-                           & F.col("codes").isNotNull())
-                   .withColumn("adc_d2", F.round(adc("codes"), 6)))
-    # TakeOrderedAndProject (per-partition partial top-k) — never a
-    # global Window rank over the full scored table (_ranked_topk note)
-    top = (scored.select("vec_id", "adc_d2")
-                 .orderBy(F.col("adc_d2").asc(), F.col("vec_id").asc())
-                 .limit(k))
-    w = Window.orderBy(F.col("adc_d2").asc(), F.col("vec_id").asc())
-    return top.withColumn("rank", F.row_number().over(w))
-
-
 def ivf_pq_topk(emb: DataFrame, query_id: int, dims: int, k: int = 10,
                 n_lists: int = 8, n_probe: int = 2,
                 m: int = 8, ksub: int = 16,
@@ -1256,8 +1191,8 @@ def ivf_pq_topk(emb: DataFrame, query_id: int, dims: int, k: int = 10,
                 id_col: str = "vec_id",
                 vec_col: str = "embedding") -> DataFrame:
     """IVF-PQ: the composed 100 TB ANN design.  Coarse k-means lists
-    prune the scan to n_probe partitions (ivf_ann_topk's index); within
-    the probed lists the scoring touches ONLY the PQ codes table
+    prune the scan to n_probe partitions (ivf_ann_topk_batch's index);
+    within the probed lists the scoring touches ONLY the PQ codes table
     (m small ints/row — the 32-64x memory shrink that keeps a 10^12-row
     index resident) via the ADC LUT; rerank > 0 then re-joins the raw
     vectors for the ADC top-`rerank` only and re-orders those by exact
@@ -1268,7 +1203,8 @@ def ivf_pq_topk(emb: DataFrame, query_id: int, dims: int, k: int = 10,
     the EXACT rounded d2 of the re-ranked survivors.  rerank >= corpus
     and n_probe = n_lists and a complete codebook degenerate to exact
     brute-force L2 top-k (the SQL-oracle configuration, same trick as
-    ivf_ann_exact)."""
+    ivf_ann_exact).  A query_id absent from the table raises ValueError
+    (the pq_adc_topk_batch contract)."""
     e = emb.select(F.col(id_col).alias("vec_id"),
                    F.col(vec_col).cast("array<double>").alias("v"))
     # coarse quantizer == the IVF index build
@@ -1282,8 +1218,7 @@ def ivf_pq_topk(emb: DataFrame, query_id: int, dims: int, k: int = 10,
     codes = pq_encode(emb, CB, id_col=id_col, vec_col=vec_col) \
         .join(listed, "vec_id")
 
-    qrow = (e.filter(F.col("vec_id") == query_id).select("v").first())
-    qv = np.asarray(qrow["v"], dtype=np.float64)
+    qv = _query_vectors(e, [query_id])[int(query_id)]
     d2c = ((centers - qv[None, :]) ** 2).sum(axis=1)
     probe = [int(i) for i in np.argsort(d2c)[:n_probe]]
     adc = _adc_score_udf(_adc_lut(qv, CB))
@@ -1312,42 +1247,43 @@ def ivf_pq_topk(emb: DataFrame, query_id: int, dims: int, k: int = 10,
 
 
 def pq_adc_topk_batch(emb: DataFrame, query_ids: "Sequence[int]",
-                      dims: int, codebook: "np.ndarray", k: int = 10,
+                      dims: int, codebook: "np.ndarray" = None, k: int = 10,
+                      m: int = 8, ksub: int = 16,
                       id_col: str = "vec_id", vec_col: str = "embedding",
                       codes: DataFrame = None) -> DataFrame:
-    """Batch PQ-ADC top-k: ONE pass over the codes table serves every
-    query.  All per-query LUTs ship together in the kernel closure
+    """PQ asymmetric-distance top-k: score every row as
+    sum_s LUT[s][code_s] where LUT[s][c] = ||q_s - centroid_{s,c}||^2 —
+    the query is never quantized, only the corpus is.  ONE pass over the
+    codes table (m small ints per row, never the raw vectors) serves
+    every query.  All per-query LUTs ship together in the kernel closure
     (nq x m x ksub doubles — ~1 MB for 64 queries at 8x256); each Arrow
     batch scores the (nq, n_batch) distance matrix with vectorized LUT
     gathers and emits only its per-query top-k rows (map-side partial
-    top-k), so the final global rank runs over <= nq * k * n_partitions
-    rows instead of nq * n_rows.  The partial is EXACT, not approximate:
-    rows are cut by the same (rounded d2, vec_id) total order the global
-    window uses, and a global top-k is always a merge of per-batch
-    top-ks under one total order.
+    top-k), so the final rank runs over <= nq * k * n_partitions rows
+    instead of nq * n_rows.  The partial is EXACT, not approximate: rows
+    are cut by the same (rounded d2, vec_id) total order the final window
+    uses, and a global top-k is always a merge of per-batch top-ks under
+    one total order.  Output: (query_id, vec_id, adc_d2, rank<=k).
 
-    Same batch-amortization argument as ivf_ann_topk_batch / the LSH
-    batch probes; the scan never touches raw vectors."""
+    codebook=None uses the deterministic first-rows codebook (m x ksub,
+    SQL-oracle-able); pass pq_codebook_train output and a precomputed
+    `codes` table for the production path.  Ids absent from the table are
+    skipped; if none is present the call raises ValueError.
+
+    Reference shape: ANN memory path of the dedup/similarity family
+    (SURVEY §2 training-data ops); PQ follows Jegou, Douze, Schmid,
+    "Product Quantization for Nearest Neighbor Search", TPAMI 2011."""
+    if codebook is None:
+        codebook = pq_codebook_first_rows(emb, dims, m=m, ksub=ksub,
+                                          id_col=id_col, vec_col=vec_col)
     CB = np.ascontiguousarray(codebook)
     m, ksub, dsub = CB.shape
     if codes is None:
         codes = pq_encode(emb, CB, id_col=id_col, vec_col=vec_col)
 
-    ids = [int(i) for i in query_ids]
-    qrows = {int(r[0]): np.asarray(r[1], dtype=np.float64)
-             for r in emb.filter(F.col(id_col).isin(ids))
-                         .select(id_col,
-                                 F.col(vec_col).cast("array<double>"))
-                         .collect()}
-    # ids absent from the table are skipped (the ivf_ann_topk_batch
-    # contract) — but an entirely-unresolvable request dies HERE with a
-    # clear message, not as an opaque np.stack error inside the kernel
-    ids = [i for i in ids if i in qrows]
-    if not ids:
-        raise ValueError(
-            f"none of query_ids {list(query_ids)!r} present in {id_col}")
-    luts = np.stack([_adc_lut(qrows[q], CB) for q in ids])  # (nq, m, ksub)
-    qarr = np.asarray(ids, dtype=np.int64)
+    qrows = _query_vectors(emb, query_ids, id_col, vec_col)
+    luts = np.stack([_adc_lut(v, CB) for v in qrows.values()])  # (nq,m,ksub)
+    qarr = np.asarray(list(qrows), dtype=np.int64)
 
     def score(batches):
         for pdf in batches:
@@ -1371,10 +1307,7 @@ def pq_adc_topk_batch(emb: DataFrame, query_ids: "Sequence[int]",
 
     partial = codes.mapInPandas(
         score, "query_id long, vec_id long, adc_d2 double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("vec_id").asc())
-    return (partial.withColumn("rank", F.row_number().over(w))
-                   .filter(F.col("rank") <= k))
+    return _per_query_topk(partial, k, F.col("adc_d2").asc())
 
 
 def contamination_pairs(docs: DataFrame, probes: DataFrame,

@@ -307,9 +307,9 @@ def q_lsh_ann(spark, sf_dir):
     """Banded sign-LSH ANN: (band, key) equi-join then exact cosine."""
     # explicit geometry: the generated literal oracle SQL is fixed at
     # 8x8, so the driver row must not auto-size with the corpus
-    return textops.lsh_ann_topk(_t(spark, sf_dir, "embeddings"),
-                                query_id=QUERY_VEC, dims=EMB_DIMS, k=5,
-                                planes=textops.PLANES_PER_BAND)
+    return textops.lsh_ann_topk_batch(
+        _t(spark, sf_dir, "embeddings"), [QUERY_VEC], dims=EMB_DIMS, k=5,
+        planes=textops.PLANES_PER_BAND).drop("query_id")
 
 
 def _banded_keys_cte() -> str:
@@ -366,7 +366,8 @@ def q_lsh_ann_batch(spark, sf_dir):
     shape a 100 TB training-data pipeline runs."""
     return textops.lsh_ann_topk_batch(
         _t(spark, sf_dir, "embeddings"), BATCH_QUERY_IDS,
-        dims=EMB_DIMS, k=5, planes=textops.PLANES_PER_BAND)
+        dims=EMB_DIMS, k=5, planes=textops.PLANES_PER_BAND
+    ).drop("n_bands_shared")
 
 
 def _sql_lsh_ann_batch(probe_bits: int = 0) -> str:
@@ -421,7 +422,8 @@ def q_lsh_ann_multiprobe(spark, sf_dir):
     twin of the pytest superset property."""
     return textops.lsh_ann_topk_batch(
         _t(spark, sf_dir, "embeddings"), BATCH_QUERY_IDS,
-        dims=EMB_DIMS, k=5, probe_bits=1, planes=textops.PLANES_PER_BAND)
+        dims=EMB_DIMS, k=5, probe_bits=1, planes=textops.PLANES_PER_BAND
+    ).drop("n_bands_shared")
 
 
 SQL_LSH_ANN_MULTIPROBE = _sql_lsh_ann_batch(1)
@@ -503,8 +505,9 @@ def q_ivf_ann(spark, sf_dir):
     lists. The quantizer's sampled Lloyd iterations are not
     SQL-expressible — rows-only driver check; exactness vs brute force is
     pinned in tests/test_textops.py."""
-    return textops.ivf_ann_topk(_t(spark, sf_dir, "embeddings"),
-                                query_id=QUERY_VEC, dims=EMB_DIMS, k=5)
+    return textops.ivf_ann_topk_batch(
+        _t(spark, sf_dir, "embeddings"), [QUERY_VEC], dims=EMB_DIMS, k=5
+    ).drop("query_id")
 
 
 IVF_LISTS = 8
@@ -519,8 +522,8 @@ def q_ivf_ann_exact(spark, sf_dir):
     (VERDICT r4 Next #3). The pruned n_probe < n_lists row (ivf_ann)
     stays rows-only by nature; list_id is engine-internal k-means
     labeling and is projected away here."""
-    return textops.ivf_ann_topk(
-        _t(spark, sf_dir, "embeddings"), query_id=QUERY_VEC,
+    return textops.ivf_ann_topk_batch(
+        _t(spark, sf_dir, "embeddings"), [QUERY_VEC],
         dims=EMB_DIMS, k=5, n_lists=IVF_LISTS, n_probe=IVF_LISTS
     ).select("vec_id", "cosine", "rank")
 
@@ -1015,9 +1018,9 @@ def q_pq_adc_topk(spark, sf_dir):
     codebook build, argmin encode with (d2, cidx) tie-break, LUT scoring,
     ranked top-k.  Production indexes swap in pq_codebook_train (k-means
     per subspace) — same encode/score code path, pytest-pinned."""
-    return textops.pq_adc_topk(
-        _t(spark, sf_dir, "embeddings"), query_id=QUERY_VEC,
-        dims=EMB_DIMS, k=TOPK, m=PQ_M, ksub=PQ_KSUB)
+    return textops.pq_adc_topk_batch(
+        _t(spark, sf_dir, "embeddings"), [QUERY_VEC],
+        dims=EMB_DIMS, k=TOPK, m=PQ_M, ksub=PQ_KSUB).drop("query_id")
 
 
 _PQ_DSUB = EMB_DIMS // PQ_M

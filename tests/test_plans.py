@@ -150,6 +150,39 @@ def test_lsh_pair_joins_read_cached_signatures(spark, executed_plans):
         assert nodes(plans[-1], "Scan parquet") == 0
 
 
+def _partial_limits_below_exchange(description: str) -> list[str]:
+    """Arguments of each Partial WindowGroupLimit that sits directly
+    below a hashpartitioning Exchange on query_id (the map-side half of a
+    per-query `row_number() <= k` top-k)."""
+    details = dict(re.findall(
+        r"^\((\d+)\) \S+\n(?:[^\n]+\n)*?Arguments: (.*)$", description, re.M))
+    tree = description.split("\n\n")[0].splitlines()
+    out = []
+    for up, down in zip(tree, tree[1:]):
+        ex = re.search(r"\bExchange \((\d+)\)$", up)
+        wgl = re.search(r"\bWindowGroupLimit \((\d+)\)$", down)
+        if (ex and wgl
+                and "hashpartitioning(query_id" in details.get(ex[1], "")
+                and details.get(wgl[1], "").endswith(", Partial")):
+            out.append(details[wgl[1]])
+    return out
+
+
+@pytest.mark.parametrize("name", ["lsh_ann", "lsh_ann_batch", "ivf_ann",
+                                  "ivf_ann_exact", "pq_adc_topk"])
+def test_ann_topk_is_map_side_partial_window(spark, executed_plans, name):
+    """Each ANN index has one probe whose per-query top-k is a
+    `row_number() <= k` window; Catalyst must plan it as a Partial
+    WindowGroupLimit below the query_id exchange, so every partition
+    ships at most k rows per query (never a single-task global sort)."""
+    from data_cube_utilities_spark import queries as q
+
+    fn = q.registry()[name][0]
+    _, plans = executed_plans(
+        lambda: fn(spark, "/root/testdata/sf0.001").collect())
+    assert any(_partial_limits_below_exchange(p) for p in plans), name
+
+
 def test_text_fanout_runs_at_full_parallelism(spark, tmp_path):
     """VERDICT r4 What's-wrong #1: the shingle x band x md5 fan-out must
     NOT execute at the scan's partitioning — a single-row-group parquet
@@ -239,7 +272,7 @@ def test_group_b_operators_release_their_caches(spark, cached_ids):
         lambda: textops.embedding_near_dup_pairs(emb, dims=64,
                                                  threshold=0.3),
         lambda: textops.lsh_ann_topk_batch(emb, [0, 7], dims=64, k=3),
-        lambda: textops.lsh_ann_topk(emb, query_id=0, dims=64, k=3),
+        lambda: textops.lsh_ann_topk_batch(emb, [0], dims=64, k=3),
         lambda: textops.hash_near_dup_pairs(
             docs.select("doc_id", F.xxhash64("text").alias("phash"))),
         lambda: textops.pack_chunks(docs, window=64, n_shards=8),

@@ -99,7 +99,7 @@ def test_lsh_ann_subset_of_brute(spark):
     pdf = pd.DataFrame({"vec_id": np.arange(200, dtype=np.int64),
                         "embedding": [v.tolist() for v in vecs]})
     emb = spark.createDataFrame(pdf)
-    ann = textops.lsh_ann_topk(emb, query_id=0, dims=16, k=5).toPandas()
+    ann = textops.lsh_ann_topk_batch(emb, [0], dims=16, k=5).toPandas()
     assert 1 <= len(ann) <= 5
     # every ANN hit shares >=1 banded sign-LSH key with the query
     assert (ann.n_bands_shared >= 1).all()
@@ -115,8 +115,9 @@ def test_ivf_ann(spark):
     pdf = pd.DataFrame({"vec_id": np.arange(300, dtype=np.int64),
                         "embedding": [v.tolist() for v in vecs]})
     emb = spark.createDataFrame(pdf)
-    out = textops.ivf_ann_topk(emb, query_id=0, dims=8, k=5,
-                               n_lists=6, n_probe=2).toPandas()
+    out = (textops.ivf_ann_topk_batch(emb, [0], dims=8, k=5,
+                                      n_lists=6, n_probe=2)
+           .toPandas().sort_values("rank"))
     assert 1 <= len(out) <= 5
     assert out.list_id.nunique() <= 2  # only probed lists searched
     # recall sanity: IVF top hit should appear in the brute-force top-20
@@ -290,9 +291,9 @@ def test_batch_ann_multiprobe_recall_superset(spark):
 
 
 def test_batch_ivf_matches_single_query_results(spark):
-    """Batch IVF with one index build returns, per query, exactly what the
-    single-query operator returns (same quantizer seed -> same lists ->
-    same candidates -> same ranked top-k)."""
+    """Batch IVF with one index build returns, per query, exactly what a
+    one-id batch returns for that query alone (same quantizer seed ->
+    same lists -> same candidates -> same ranked top-k)."""
     from data_cube_utilities_spark.operators import textops
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -300,7 +301,7 @@ def test_batch_ivf_matches_single_query_results(spark):
     batch = (textops.ivf_ann_topk_batch(emb, ids, dims=64, k=5)
              .toPandas().sort_values(["query_id", "rank"]))
     for qid in ids:
-        single = (textops.ivf_ann_topk(emb, qid, dims=64, k=5)
+        single = (textops.ivf_ann_topk_batch(emb, [qid], dims=64, k=5)
                   .toPandas().sort_values("rank"))
         sub = batch[batch["query_id"] == qid]
         assert list(sub["vec_id"]) == list(single["vec_id"])
@@ -447,8 +448,8 @@ def test_pq_adc_exact_with_complete_codebook(spark):
     # to an exact-match centroid, so ADC == true squared L2 distance
     emb, vecs = _pq_emb(spark, n=40, dims=16)
     cb = textops.pq_codebook_first_rows(emb, dims=16, m=4, ksub=40)
-    out = textops.pq_adc_topk(emb, query_id=0, dims=16, codebook=cb,
-                              k=10).toPandas()
+    out = textops.pq_adc_topk_batch(emb, [0], dims=16, codebook=cb,
+                                    k=10).toPandas().sort_values("rank")
     true_d2 = ((vecs - vecs[0]) ** 2).sum(axis=1)
     order = np.argsort(true_d2, kind="stable")
     exact_top = [i for i in order if i != 0][:10]
@@ -463,8 +464,8 @@ def test_pq_trained_codebook_recall(spark):
     assert cb.shape == (8, 32, 2)
     codes = textops.pq_encode(emb, cb).toPandas()
     assert codes.codes.map(len).eq(8).all()
-    out = textops.pq_adc_topk(emb, query_id=0, dims=16, codebook=cb,
-                              k=10).toPandas()
+    out = textops.pq_adc_topk_batch(emb, [0], dims=16, codebook=cb,
+                                    k=10).toPandas()
     true_d2 = ((vecs - vecs[0]) ** 2).sum(axis=1)
     exact_top = [i for i in np.argsort(true_d2) if i != 0][:10]
     # quantized distances still put most of the true neighbors in the top-k
@@ -513,6 +514,7 @@ def test_ivf_pq_rerank_restores_exact_distances(spark):
 
 
 def test_pq_batch_matches_single_query(spark):
+    """A query in a multi-id batch gets the rows it gets probed alone."""
     emb, vecs = _pq_emb(spark, n=150, dims=16, seed=33)
     emb = emb.repartition(6)          # force multi-partition partial top-k
     cb = textops.pq_codebook_train(emb, dims=16, m=8, ksub=16, seed=7)
@@ -520,8 +522,9 @@ def test_pq_batch_matches_single_query(spark):
     batch = textops.pq_adc_topk_batch(emb, ids, dims=16, codebook=cb,
                                       k=5).toPandas()
     for q in ids:
-        single = textops.pq_adc_topk(emb, query_id=q, dims=16, codebook=cb,
-                                     k=5).toPandas()
+        single = (textops.pq_adc_topk_batch(emb, [q], dims=16, codebook=cb,
+                                            k=5).toPandas()
+                  .sort_values("rank"))
         b = batch[batch.query_id == q].sort_values("rank")
         assert list(b.vec_id) == list(single.vec_id)
         np.testing.assert_allclose(b.adc_d2.to_numpy(),
@@ -610,14 +613,57 @@ def test_pq_null_and_nan_vectors_excluded_from_adc(spark):
                                         dims=8, m=2, ksub=3)
     codes = textops.pq_encode(df, cb).toPandas().set_index("vec_id")
     assert codes.loc[2].codes is None and codes.loc[3].codes is None
-    single = textops.pq_adc_topk(df, query_id=0, dims=8, codebook=cb,
-                                 k=10).toPandas()
+    single = textops.pq_adc_topk_batch(df, [0], dims=8, codebook=cb,
+                                       k=10).toPandas()
     assert set(single.vec_id) == {1, 4}          # 2 and 3 excluded
-    batch = textops.pq_adc_topk_batch(df, [0], dims=8, codebook=cb,
+    batch = textops.pq_adc_topk_batch(df, [0, 1], dims=8, codebook=cb,
                                       k=10).toPandas()
-    assert set(batch.vec_id) == {1, 4}
+    assert set(batch[batch.query_id == 0].vec_id) == {1, 4}
+    assert set(batch[batch.query_id == 1].vec_id) == {0, 4}
     with pytest.raises(ValueError, match="none of query_ids"):
         textops.pq_adc_topk_batch(df, [999], dims=8, codebook=cb, k=5)
+
+
+def _ann_probes(emb):
+    """The driver-side ANN probes as ids -> DataFrame calls."""
+    return {
+        "ivf": lambda ids: textops.ivf_ann_topk_batch(
+            emb, ids, dims=16, k=5, n_lists=4),
+        "pq": lambda ids: textops.pq_adc_topk_batch(
+            emb, ids, dims=16, k=5, m=4, ksub=8),
+    }
+
+
+def test_ann_probes_reject_all_absent_query_ids(spark):
+    """One absent-id contract: where the query vectors reach the driver
+    (IVF, PQ-ADC, IVF-PQ), a request naming no stored id raises the same
+    ValueError, and an id whose vector is NULL counts as absent; the LSH
+    probe, whose query block never leaves the executors, returns an empty
+    result instead."""
+    emb, _ = _pq_emb(spark, n=60, dims=16, seed=41)
+    emb = emb.union(spark.createDataFrame(
+        [(998, None)], "vec_id long, embedding array<double>"))
+    for probe in _ann_probes(emb).values():
+        for ids in ([999], [998, 999]):
+            with pytest.raises(ValueError, match="none of query_ids"):
+                probe(ids)
+    for qid in (998, 999):
+        with pytest.raises(ValueError, match="none of query_ids"):
+            textops.ivf_pq_topk(emb, qid, dims=16, k=5, n_lists=4, m=4,
+                                ksub=8)
+    assert textops.lsh_ann_topk_batch(emb, [998, 999], dims=16,
+                                      k=5).count() == 0
+
+
+def test_ann_probes_skip_absent_ids_in_mixed_request(spark):
+    emb, _ = _pq_emb(spark, n=60, dims=16, seed=41)
+    key = ["query_id", "rank"]
+    for name, probe in _ann_probes(emb).items():
+        mixed = probe([0, 999]).toPandas().sort_values(key)
+        alone = probe([0]).toPandas().sort_values(key)
+        assert set(mixed.query_id) == {0} and len(alone) == 5, name
+        pd.testing.assert_frame_equal(mixed.reset_index(drop=True),
+                                      alone.reset_index(drop=True))
 
 
 def test_deterministic_sample_reproducible_and_stratified(spark):
